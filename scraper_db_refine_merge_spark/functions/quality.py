@@ -158,13 +158,22 @@ def score_venue_info(venue: Column) -> Column:
 # Datetime (quality_scorer.py:193-266)
 
 
-def score_datetime_info(dt: Column, now: datetime | None = None) -> Column:
-    now = now or datetime.now(timezone.utc)
-    now_lit = F.lit(now.replace(tzinfo=None)).cast("timestamp")
-    past_cutoff = F.lit(now.replace(tzinfo=None) - timedelta(days=30)).cast("timestamp")
-    future_cutoff = F.lit(now.replace(tzinfo=None) + timedelta(days=2 * 365)).cast("timestamp")
-    _ = now_lit  # cutoffs carry the comparison; kept for clarity
+def datetime_cutoffs(now: datetime | None = None) -> tuple[Column, Column]:
+    """(past, future) timestamp literals bounding a "reasonable" start date:
+    30 days before ``now`` and two years after it (quality_scorer.py:214-222).
+    The only ``now``-dependent inputs of the scorer, so a caller that reuses
+    one scorer expression across batches can feed them as columns."""
+    now = (now or datetime.now(timezone.utc)).replace(tzinfo=None)
+    return (
+        F.lit(now - timedelta(days=30)).cast("timestamp"),
+        F.lit(now + timedelta(days=2 * 365)).cast("timestamp"),
+    )
 
+
+def score_datetime_info(dt: Column, cutoffs: tuple[Column, Column]) -> Column:
+    """``cutoffs``: the (past, future) pair of :func:`datetime_cutoffs`, as
+    literals or as columns carrying them."""
+    past_cutoff, future_cutoff = cutoffs
     start_str = dt["start_date"]
     end_str = dt["end_date"]
     has_start = _truthy(start_str)
@@ -356,12 +365,13 @@ def data_quality_struct(
     dt: Column,
     acts: Column,
     ticketing: Column,
-    now: datetime | None = None,
+    cutoffs: tuple[Column, Column],
 ) -> Column:
-    """Full data_quality struct for an event row (quality_scorer.py:29-91)."""
+    """Full data_quality struct for an event row (quality_scorer.py:29-91);
+    ``cutoffs`` as in :func:`score_datetime_info`."""
     ts = score_title_info(title)
     vs = score_venue_info(venue)
-    ds = score_datetime_info(dt, now)
+    ds = score_datetime_info(dt, cutoffs)
     as_ = score_acts_info(acts)
     tks = score_ticketing_info(ticketing)
     fqs = F.struct(

@@ -34,6 +34,8 @@ it changes no results, only the shuffle volume.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -61,9 +63,16 @@ _AUTO_BITS_PER_KEY = 16  # ~0.1% fp at k=5
 # hash collision would only reuse a wrong SIZE — filter exactness never
 # depends on num_bits (false positives are corrected by the anti-join),
 # so this memo is collision-safe in a way a result-affecting memo
-# (adaptive_band_size etc.) would not be. Session-lived ints, a few bytes
-# per distinct batch lineage.
+# (adaptive_band_size etc.) would not be.
+# Staleness: the key names the lineage, not the data. A lineage whose
+# files change in place (same paths, new contents) keeps the size counted
+# the first time — harmless for the same reason (only the fp rate moves).
+# Bounded, oldest entry out first: every merge batch is a fresh lineage
+# (a new file, or the merge's RDD-backed leaf), so an unbounded memo grew
+# by one entry per batch for the life of the process.
 _BITS_MEMO: dict[int, int] = {}
+_BITS_MEMO_MAX = 256
+_BITS_MEMO_LOCK = threading.Lock()  # eviction iterates the dict
 
 
 def resolve_num_bits(
@@ -93,11 +102,15 @@ def resolve_num_bits(
         key = batch._jdf.queryExecution().analyzed().semanticHash()
     except Exception:
         key = None
-    if key is not None and key in _BITS_MEMO:
-        return _BITS_MEMO[key]
+    hit = _BITS_MEMO.get(key) if key is not None else None
+    if hit is not None:
+        return hit
     bits = _bits_for(max(batch.count(), 1))
     if key is not None:
-        _BITS_MEMO[key] = bits
+        with _BITS_MEMO_LOCK:
+            _BITS_MEMO[key] = bits
+            while len(_BITS_MEMO) > _BITS_MEMO_MAX:
+                del _BITS_MEMO[next(iter(_BITS_MEMO))]
     return bits
 
 
@@ -189,8 +202,9 @@ def bloom_might_contain(
 ) -> Column:
     """Boolean probe: False ⇒ the key is definitely not in the built batch.
 
-    Never NULL (NULL key components hash like the build side hashes them),
-    so it is safe under ``filter`` on both the positive and negated branch.
+    Never NULL (NULL key components hash like the build side hashes them,
+    and NULL ``words`` — no filter — probe False), so it is safe under
+    ``filter`` on both the positive and negated branch.
 
     ``num_bits=None`` (ADVICE r16): derive the size from the words array
     itself (``size(words) * 64``) so a standalone probe can never silently
@@ -208,7 +222,8 @@ def bloom_might_contain(
             F.try_element_at(words, _word_ix(pos) + F.lit(1)), F.lit(0).cast("long")
         )
         cond = cond & (word.bitwiseAND(_bit_val(pos)) != F.lit(0))
-    return cond
+    # a derived size is NULL on NULL words, and so would be every position
+    return cond if num_bits is not None else F.coalesce(cond, F.lit(False))
 
 
 def pruned_left_anti(

@@ -17,21 +17,37 @@ Input shape: the raw calendar/card rows of FIXTURES.md §1/§2 —
 price_text?, genres?, description?``. Missing columns are tolerated (filled
 with NULL) so heterogeneous sources union cleanly (J7/U1).
 
-Everything is a single projection — at 100 TB this is a scan + map with zero
-shuffles; the only shuffle in the ingest DAG is the final dedup/merge.
+Executed, everything is one scan + map — at 100 TB zero shuffles; the only
+shuffle in the ingest DAG is the final dedup/merge.
+
+Built, the projection is ~5k Column objects (~10.8k py4j round trips), and
+for a re-scrape batch of a few hundred rows that driver-side build, not the
+data, was refine's cost. So the named output Columns are built once per
+(live SparkContext, input schema, ``source_platform``, ``default_city``,
+``default_country``) — a :class:`_Template` — and every batch of that shape
+reuses them. A batch's ``now`` enters as literal columns appended to the
+input (the two cutoffs of ``quality.datetime_cutoffs`` and the ISO
+timestamp); the optimizer collapses the selects and folds the literals
+back, so the optimized plan equals the one built with inline literals.
+Measured on a 4-core host (perfbench ingest, 400-row batches, traced):
+refine's build went from 2233 ms to 892 ms per batch.
 """
 
 from __future__ import annotations
 
+import threading
+from collections import OrderedDict
+from dataclasses import dataclass
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from .functions.dates import parse_club_date, strip_day_name, to_utc_iso
 from .functions.ids import generate_unique_id
 from .functions.normalize import normalize_genres, normalize_venue_name, timezone_from_location
-from .functions.quality import data_quality_struct
+from .functions.quality import data_quality_struct, datetime_cutoffs
 from .functions.strings import (
     classify_event_type,
     extract_price,
@@ -43,19 +59,60 @@ from .functions.text import search_blob
 
 RAW_COLUMNS = ("title", "url", "venue", "date_text", "lineup", "price_text", "genres", "description")
 
+# types of the raw columns an input may lack (the rest are strings)
+_DEFAULT_LINEUP = ArrayType(
+    StructType([StructField("name", StringType()), StructField("role", StringType())])
+)
+_RAW_TYPES = {"lineup": _DEFAULT_LINEUP, "genres": ArrayType(StringType())}
 
-def _ensure_columns(df: DataFrame) -> DataFrame:
-    cols = set(df.columns)
-    if "lineup" not in cols:
-        df = df.withColumn(
-            "lineup", F.lit(None).cast("array<struct<name:string,role:string>>")
-        )
-    for c in ("title", "url", "venue", "date_text", "price_text", "description"):
-        if c not in cols:
-            df = df.withColumn(c, F.lit(None).cast("string"))
-    if "genres" not in cols:
-        df = df.withColumn("genres", F.lit(None).cast("array<string>"))
-    return df
+# the per-call values, appended to the input as literal columns
+_PAST, _FUTURE, _NOW_ISO = "__refine_past_cutoff", "__refine_future_cutoff", "__refine_now_iso"
+
+
+@dataclass(frozen=True)
+class _Template:
+    """refine's projection for one input shape, as named Columns.
+
+    ``inputs`` selects RAW_COLUMNS from the input (typed NULL where it
+    lacks one); ``base`` assembles the event document and passes the
+    cutoffs through; ``scored`` adds data_quality, start_ts and venue_name;
+    ``final`` adds overall_score (a field of data_quality) and search_blob.
+    Each stage reads the previous one's ATTRIBUTES: inlining base's
+    expression trees into the scorer would multiply the plan."""
+
+    inputs: list[Column]
+    base: list[Column]
+    scored: list[Column]
+    final: list[Column]
+
+
+_TEMPLATE_MAX = 16
+_templates: OrderedDict[tuple, _Template] = OrderedDict()
+_templates_lock = threading.Lock()
+
+
+def _template(
+    df: DataFrame, source_platform: str, default_city: str, default_country: str
+) -> _Template:
+    """The memoized template for ``df``'s schema, keyed on the live
+    SparkContext too: a stopped and restarted session drops every template
+    of the old context instead of reusing its Column handles. LRU, at most
+    ``_TEMPLATE_MAX`` entries (input shapes x platforms x defaults)."""
+    sc = df.sparkSession.sparkContext
+    key = (sc, df.schema.json(), source_platform, default_city, default_country)
+    with _templates_lock:
+        for k in [k for k in _templates if k[0] is not sc]:
+            del _templates[k]
+        t = _templates.get(key)
+        if t is None:
+            t = _templates[key] = _build_template(
+                df.schema, source_platform, default_city, default_country
+            )
+            while len(_templates) > _TEMPLATE_MAX:
+                _templates.popitem(last=False)
+        else:
+            _templates.move_to_end(key)
+    return t
 
 
 def refine(
@@ -65,10 +122,30 @@ def refine(
     default_city: str = "Ibiza",
     default_country: str = "Spain",
 ) -> DataFrame:
-    """Raw rows → unified event rows (one projection, SURVEY D4)."""
+    """Raw rows → unified event rows (SURVEY D4): the memoized projection
+    for this input shape over the input plus this call's ``now`` values."""
     now = now or datetime.now(timezone.utc)
-    now_iso = now.strftime("%Y-%m-%dT%H:%M:%S+00:00")
-    df = _ensure_columns(df)
+    t = _template(df, source_platform, default_city, default_country)
+    past, future = datetime_cutoffs(now)
+    prepared = df.select(
+        *t.inputs,
+        past.alias(_PAST),
+        future.alias(_FUTURE),
+        F.lit(now.strftime("%Y-%m-%dT%H:%M:%S+00:00")).alias(_NOW_ISO),
+    )
+    return prepared.select(*t.base).select(*t.scored).select(*t.final)
+
+
+def _build_template(
+    schema: StructType, source_platform: str, default_city: str, default_country: str
+) -> _Template:
+    present = set(schema.fieldNames())
+    inputs = [
+        F.col(c) if c in present else F.lit(None).cast(_RAW_TYPES.get(c, StringType())).alias(c)
+        for c in RAW_COLUMNS
+    ]
+    lineup_type = schema["lineup"].dataType if "lineup" in present else _DEFAULT_LINEUP
+    now_iso = F.col(_NOW_ISO)
 
     title = F.coalesce(normalize_text_v2(F.col("title")), F.lit("Untitled Event"))
     venue_name = F.coalesce(
@@ -84,11 +161,11 @@ def refine(
     # W1 — positional headliner + billing order (schema_adapter_enhanced.py:646-682)
     # act names strip with python_strip: the reference strips artist names
     # with str.strip() (schema_adapter_enhanced.py:297) before id generation.
-    lineup = F.coalesce(F.col("lineup"), F.lit(None).cast(df.schema["lineup"].dataType))
+    lineup = F.coalesce(F.col("lineup"), F.lit(None).cast(lineup_type))
     named = F.filter(lineup, lambda a: a["name"].isNotNull() & (python_strip(a["name"]) != ""))
 
     def _act(a):
-        role = a["role"] if "role" in df.schema["lineup"].dataType.elementType.fieldNames() else F.lit(None)
+        role = a["role"] if "role" in lineup_type.elementType.fieldNames() else F.lit(None)
         return F.struct(
             generate_unique_id("artist", python_strip(a["name"])).alias("act_id"),
             python_strip(a["name"]).alias("act_name"),
@@ -222,65 +299,68 @@ def refine(
         F.array().cast("array<string>").alias("hashtags"),
     )
 
-    base = df.select(
-        event_id.alias("event_id"),
-        event_id.alias("canonical_id"),
-        title.alias("title"),
-        event_type.alias("type"),
-        F.lit("scheduled").alias("status"),
-        datetime_struct.alias("datetime"),
-        venue_struct.alias("venue"),
-        acts.alias("acts"),
-        content_struct.alias("content"),
-        music_struct.alias("music"),
-        ticketing_struct.alias("ticketing"),
-        F.struct(
+    document = {
+        "event_id": event_id,
+        "canonical_id": event_id,
+        "title": title,
+        "type": event_type,
+        "status": F.lit("scheduled"),
+        "datetime": datetime_struct,
+        "venue": venue_struct,
+        "acts": acts,
+        "content": content_struct,
+        "music": music_struct,
+        "ticketing": ticketing_struct,
+        "scraping_metadata": F.struct(
             F.lit(source_platform).alias("source_platform"),
             F.col("url").alias("source_url"),
             F.lit(None).cast("string").alias("source_event_id"),
-            F.lit(now_iso).alias("first_scraped"),
-            F.lit(now_iso).alias("last_scraped"),
+            now_iso.alias("first_scraped"),
+            now_iso.alias("last_scraped"),
             F.lit("2.0").alias("scraper_version"),
             F.map_from_arrays(F.array(), F.array()).cast("map<string,string>").alias("raw_data"),
-        ).alias("scraping_metadata"),
-        F.struct(
+        ),
+        "deduplication": F.struct(
             F.lit(True).alias("is_canonical"),
             F.array().cast("array<string>").alias("merged_from_ids"),
             F.array().cast("array<string>").alias("merge_log"),
-        ).alias("deduplication"),
-        F.lit(now_iso).alias("created_at"),
-        F.lit(now_iso).alias("updated_at"),
-        F.struct(
+        ),
+        "created_at": now_iso,
+        "updated_at": now_iso,
+        "system_flags": F.struct(
             F.lit(False).alias("is_featured"),
             F.lit(False).alias("is_hidden"),
             F.lit(False).alias("needs_refresh"),
             F.lit(None).cast("string").alias("refresh_requested_at"),
-        ).alias("system_flags"),
-    )
-
-    # D1/D2 — quality scoring over the assembled structures
-    scored = base.withColumn(
-        "data_quality",
-        data_quality_struct(
-            F.col("title"), F.col("venue"), F.col("datetime"), F.col("acts"), F.col("ticketing"), now
         ),
-    )
+    }
+    base = [c.alias(n) for n, c in document.items()] + [F.col(_PAST), F.col(_FUTURE)]
 
-    # Gold-layer derived columns (query accelerators; SURVEY §1.5)
-    return (
-        scored.withColumn("start_ts", F.to_timestamp(F.col("datetime.start_date")))
-        .withColumn("venue_name", F.col("venue.name"))
-        .withColumn("overall_score", F.col("data_quality.overall_score"))
-        .withColumn(
-            "search_blob",
-            search_blob(
-                F.col("title"),
-                F.col("content.full_description"),
-                F.col("venue.name"),
-                F.array_join(F.col("acts.act_name"), " "),
-            ),
-        )
-    )
+    # D1/D2 — quality scoring over the assembled structures; then the
+    # gold-layer derived columns (query accelerators; SURVEY §1.5)
+    scored = [
+        *(F.col(n) for n in document),
+        data_quality_struct(
+            F.col("title"), F.col("venue"), F.col("datetime"), F.col("acts"), F.col("ticketing"),
+            (F.col(_PAST), F.col(_FUTURE)),
+        ).alias("data_quality"),
+        F.to_timestamp(F.col("datetime.start_date")).alias("start_ts"),
+        F.col("venue.name").alias("venue_name"),
+    ]
+    final = [
+        *(F.col(n) for n in document),
+        F.col("data_quality"),
+        F.col("start_ts"),
+        F.col("venue_name"),
+        F.col("data_quality.overall_score").alias("overall_score"),
+        search_blob(
+            F.col("title"),
+            F.col("content.full_description"),
+            F.col("venue.name"),
+            F.array_join(F.col("acts.act_name"), " "),
+        ).alias("search_blob"),
+    ]
+    return _Template(inputs, base, scored, final)
 
 
 def deduplicate_events(df: DataFrame) -> DataFrame:

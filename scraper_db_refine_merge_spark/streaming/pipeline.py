@@ -99,7 +99,7 @@ def stream_ingest(
                 metrics.write.mode("append").parquet(metrics_path)
             return
         # r17 (guide §1.2): MergeStats cost real jobs per micro-batch
-        # (_overlap_stats counts over target AND the full refine lineage)
+        # (_overlap_stats aggregates the target AND the batch's keys)
         # and were discarded whenever no metrics sink was configured —
         # only collect them when the ST5 metrics emission consumes them.
         stats = merge_upsert(

@@ -167,3 +167,33 @@ def test_resolve_num_bits_memo_and_batch_count(spark):
     assert a == b
     # supplied count: no job, sized from the argument
     assert resolve_num_bits(base.select("k"), "auto", batch_count=10) == _AUTO_MIN_BITS
+
+
+def test_derived_size_probe_is_false_on_null_words(spark):
+    """ADVICE r17: NULL words (no filter) probe False, never NULL, on the
+    derived-size path too — a NULL probe drops the row from BOTH branches
+    of the definite/maybe split."""
+    df = spark.range(3).select(
+        F.col("id").cast("string").alias("k"), F.lit(None).cast("array<bigint>").alias("w")
+    )
+    got = df.select(
+        bloom_might_contain(["k"], F.col("w"), num_hashes=HASHES).alias("derived"),
+        bloom_might_contain(["k"], F.col("w"), BITS, HASHES).alias("explicit"),
+    ).collect()
+    assert [(r.derived, r.explicit) for r in got] == [(False, False)] * 3
+
+
+def test_resolve_num_bits_memo_is_bounded(spark, monkeypatch):
+    """ADVICE r17: the sizing memo keeps at most _BITS_MEMO_MAX lineages,
+    dropping the oldest first."""
+    from scraper_db_refine_merge_spark.operators import bloom
+
+    monkeypatch.setattr(bloom, "_BITS_MEMO", {})
+    monkeypatch.setattr(bloom, "_BITS_MEMO_MAX", 3)
+    frames = [spark.range(n).select(F.col("id").alias("k")) for n in (10, 20, 30, 40, 50)]
+    for f in frames:
+        bloom.resolve_num_bits(f, "auto")
+    assert len(bloom._BITS_MEMO) == 3
+    newest = frames[-1]._jdf.queryExecution().analyzed().semanticHash()
+    oldest = frames[0]._jdf.queryExecution().analyzed().semanticHash()
+    assert newest in bloom._BITS_MEMO and oldest not in bloom._BITS_MEMO

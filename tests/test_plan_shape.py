@@ -337,3 +337,46 @@ def test_q124_longest_run_semi_anti_restricted(spark, sf_dir):
     p = _plan(df)
     assert "CartesianProduct" not in p
     assert "LeftSemi" in p and "LeftAnti" in p
+
+
+def test_partitioned_merge_writes_from_materialized_batch(spark, tmp_path, monkeypatch):
+    """The partitioned merge evaluates its batch once, as an RDD-backed
+    leaf: the staged write (fresh target, then the anti-join over an
+    existing one) plans over that leaf, and none of refine's expressions
+    (its sha1 ids) survive into the write's optimized plan. A change that
+    lets the write re-evaluate refine's lineage fails here."""
+    from datetime import datetime, timezone
+
+    from pyspark.sql import functions as F
+
+    from scraper_db_refine_merge_spark.operators import merge as M
+    from scraper_db_refine_merge_spark.refine import refine
+
+    raw = spark.createDataFrame(
+        [("Glitterbox", "https://x.example/g", "Hi Ibiza", "14 June 2025", "25€"),
+         ("FUSE", "https://x.example/f", "Privilege", "15/06/2025", None)],
+        "title string, url string, venue string, date_text string, price_text string",
+    )
+    now = datetime(2025, 6, 1, tzinfo=timezone.utc)
+    refined = refine(raw, "p", now=now).withColumn(
+        "event_date", F.coalesce(F.to_date(F.col("start_ts")), F.lit("1970-01-01").cast("date"))
+    )
+    assert "sha1(" in refined._jdf.queryExecution().optimizedPlan().toString()
+
+    plans = []
+    real = M._merge_partitions_pointer
+
+    def spy(target_path, merged, *args, **kwargs):
+        plans.append(merged._jdf.queryExecution().optimizedPlan().toString())
+        return real(target_path, merged, *args, **kwargs)
+
+    monkeypatch.setattr(M, "_merge_partitions_pointer", spy)
+    target = str(tmp_path / "events")
+    for _ in range(2):
+        M.merge_upsert_partitioned(
+            spark, target, refined, key_cols=["event_id"], partition_col="event_date"
+        )
+    assert len(plans) == 2
+    for p in plans:
+        assert "LogicalRDD" in p, p
+        assert "sha1(" not in p, p

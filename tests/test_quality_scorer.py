@@ -17,6 +17,7 @@ from pyspark.sql.types import ArrayType, StructField, StructType
 from scraper_db_refine_merge_spark import schemas as SC
 from scraper_db_refine_merge_spark.functions.quality import (
     data_quality_struct,
+    datetime_cutoffs,
     quality_level,
     score_title_info,
     weak_fields,
@@ -208,7 +209,8 @@ def scored(spark):
     out = df.select(
         "name",
         data_quality_struct(
-            F.col("title"), F.col("venue"), F.col("datetime"), F.col("acts"), F.col("ticketing"), NOW
+            F.col("title"), F.col("venue"), F.col("datetime"), F.col("acts"), F.col("ticketing"),
+            datetime_cutoffs(NOW),
         ).alias("dq"),
     ).collect()
     return {r["name"]: r["dq"] for r in out}
@@ -287,7 +289,7 @@ def test_sql_twins_match_column_scorers(spark):
         "name",
         Q.score_title_info(F.col("title")).alias("t"),
         Q.score_venue_info(F.col("venue")).alias("v"),
-        Q.score_datetime_info(F.col("datetime"), now=NOW).alias("d"),
+        Q.score_datetime_info(F.col("datetime"), Q.datetime_cutoffs(NOW)).alias("d"),
         Q.score_acts_info(F.col("acts")).alias("a"),
         Q.score_ticketing_info(F.col("ticketing")).alias("k"),
     ).withColumn(

@@ -6,8 +6,8 @@ every date and price format the benchmark generator emits
 (perfbench/spec.json), non-ASCII whitespace, two input schemas interleaved,
 and repeated calls on one schema with different ``now`` values — so any
 per-schema reuse inside ``refine`` must still score each batch against its
-own ``now`` (the 2025-06-14 events are "reasonable" at NOW_1 and 'too far
-past' at NOW_2).
+own ``now`` (the 2025-06-14 events are reasonable at NOW_1 and too far in
+the past at NOW_2).
 
 Regenerate (only when refine's output is meant to change):
 
