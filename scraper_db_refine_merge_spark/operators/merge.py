@@ -1,44 +1,23 @@
-"""Keyed upsert MERGE (SURVEY S6/S7/J4/W3): Delta ``MERGE INTO`` when
-delta-spark is importable, Parquet swap fallback otherwise.
+"""Keyed upsert MERGE (SURVEY S6/S7/J4/W3) over plain parquet.
 
 The reference's merge layer is Mongo bulk ``UpdateOne(upsert=True)`` keyed by
 event_id (data_migration.py:102-158, etl_sqlite_to_mongo.py:129-164,
-scrapers_v2/utils.py:94-180). The Spark-native equivalent is Delta
-``MERGE INTO`` — transactional, cross-partition-atomic via the Delta log,
-and file-pruned (only files containing matched keys rewrite). The same
-``merge_upsert`` API dispatches to it when available (``backend="auto"``);
-without delta the documented fallback (SURVEY §4) runs: latest-wins within
-the batch → left-anti + union → atomic directory swap. In environments
-without delta-spark (including this sandbox) the parquet fallback IS the
-canonical path; both backends are held to identical upsert semantics by the
-shared-fixture test tests/test_refine_merge.py::
-test_merge_upsert_roundtrip_and_stats, whose delta parametrization executes
-wherever delta-spark is installed and self-skips elsewhere.
+scrapers_v2/utils.py:94-180), atomic per document. Two writers here:
 
-BLOCKING CONSTRAINT (verified r6, re-verified r7, r10, r11 and r12): delta-spark cannot
-execute in this sandbox — the package is not installed, ``pip install`` is
-prohibited, no ``delta-*`` jar ships under /opt/spark/jars or any ivy
-cache, ``pip download delta-spark`` finds no distribution (no network),
-and there is no way to resolve ``io.delta:delta-spark_2.13`` at session
-start. Until
-an environment provides the jar, the MERGE branch's LOGIC (dedup-before-
-merge, keyed condition, UpdateAll/InsertAll wiring, operationMetrics
-stats) is exercised by tests/test_delta_branch.py against an in-memory
-double of the DeltaTable API that simulates Delta's upsert semantics; the
-two real-delta parametrizations in test_refine_merge.py remain the
-end-to-end check wherever the package exists.
+- ``merge_upsert``: whole-table latest-wins within the batch → left-anti +
+  union → directory swap. O(table) per batch; readers scan the path.
+- ``merge_upsert_partitioned``: only the partitions the batch touches are
+  read, merged and written (what Delta MERGE's file pruning does), and the
+  commit is whole-table atomic through ONE protocol — immutable data
+  commits, an immutable manifest view, and one exclusive-create entry in
+  the commit log (streaming/store.py). No rename and no symlink anywhere,
+  so the same path runs on POSIX and on an object store.
 
 Scale notes:
 - within-batch dedup is W3 (row_number over the key) — mandatory before any
   MERGE to avoid nondeterministic multi-match (SURVEY §7 hard-part 5);
-- the whole-table fallback swap is atomic at the directory level; the
-  PARTITIONED merge commits fresh targets through a pointer layout (r14,
-  see merge_upsert_partitioned) whose single atomic pointer replace gives
-  whole-commit atomicity over plain parquet — the crash-between-partition-
-  swaps window of the r13 in-place form is closed (legacy plain-hive
-  targets keep the per-partition-atomic swap, the documented relaxation);
 - stats are computed in a SINGLE key-overlap aggregation job, not per-count
-  table re-reads (Delta path reads them from the commit's operationMetrics).
+  table re-reads.
 """
 
 from __future__ import annotations
@@ -52,6 +31,14 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from ..streaming.store import (
+    _COMMITLOG,
+    _commit_pointer,
+    _next_version,
+    _version_dir_for_write,
+    store_version_dir,
+)
 
 
 @dataclass
@@ -85,20 +72,6 @@ def _materialized(updates: DataFrame):
         leaf._jdf.queryExecution().logical().rdd().unpersist(False)
 
 
-def delta_available(spark: SparkSession | None = None) -> bool:
-    """True when delta-spark is importable AND (if a session is given) the
-    session was built with the Delta SQL extension (session.get_spark does
-    this automatically when the package is present)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except ImportError:
-        return False
-    if spark is not None:
-        ext = spark.conf.get("spark.sql.extensions", "") or ""
-        return "DeltaSparkSessionExtension" in ext
-    return True
-
-
 def _overlap_stats(
     target: DataFrame | None, updates: DataFrame, key_cols: list[str]
 ) -> tuple[int, int, int, int]:
@@ -123,55 +96,6 @@ def _overlap_stats(
     return int(row["before"]), int(row["incoming"]), int(row["batch_keys"]), int(row["updated"])
 
 
-def _merge_upsert_delta(
-    spark: SparkSession,
-    target_path: str,
-    updates: DataFrame,
-    key_cols: list[str],
-    order_cols: list[Column],
-    collect_stats: bool,
-) -> MergeStats | None:
-    """Transactional upsert via Delta ``MERGE INTO`` — cross-partition atomic
-    (the Delta log plays the role Mongo's per-doc atomicity does in the
-    reference, data_migration.py:133-139) and file-pruned: only data files
-    containing matched keys rewrite, so merge cost scales with the batch's
-    locality, not table size."""
-    from delta.tables import DeltaTable
-
-    deduped = latest_per_key(updates, key_cols, order_cols)
-    if not DeltaTable.isDeltaTable(spark, target_path):
-        deduped.write.format("delta").mode("overwrite").save(target_path)
-        if not collect_stats:
-            return None
-        total_incoming = updates.count()
-        n = deduped.count()
-        return MergeStats(total_incoming, total_incoming - n, 0, n, n)
-
-    t = DeltaTable.forPath(spark, target_path)
-    cond = " AND ".join(f"t.`{k}` = s.`{k}`" for k in key_cols)
-    (
-        t.alias("t")
-        .merge(deduped.alias("s"), cond)
-        .whenMatchedUpdateAll()
-        .whenNotMatchedInsertAll()
-        .execute()
-    )
-    if not collect_stats:
-        return None
-    # stats come from the commit's operationMetrics — zero extra scan jobs
-    m = t.history(1).select("operationMetrics").first()[0]
-    updated = int(m.get("numTargetRowsUpdated", 0))
-    inserted = int(m.get("numTargetRowsInserted", 0))
-    total_incoming = updates.count()
-    return MergeStats(
-        total_incoming=total_incoming,
-        within_batch_duplicates=total_incoming - (updated + inserted),
-        updated=updated,
-        inserted=inserted,
-        target_rows_after=t.toDF().count(),
-    )
-
-
 def _kept_rows(
     target: DataFrame, deduped: DataFrame, key_cols: list[str], prefilter: str
 ) -> DataFrame:
@@ -194,49 +118,23 @@ def merge_upsert(
     key_cols: list[str],
     order_cols: list[Column] | None = None,
     collect_stats: bool = True,
-    backend: str = "auto",
     prefilter: str = "none",
 ) -> MergeStats | None:
     """Upsert ``updates`` into the keyed table at ``target_path``.
 
-    Semantics = Mongo's ``$set`` whole-document upsert / Delta
+    Semantics = Mongo's ``$set`` whole-document upsert / SQL
     ``WHEN MATCHED UPDATE SET * WHEN NOT MATCHED INSERT *`` with
     latest-wins inside the batch.
 
-    ``backend``: ``"delta"`` requires delta-spark (raises otherwise);
-    ``"parquet"`` forces the swap fallback; ``"auto"`` uses Delta when the
-    session has it AND the target is not already a plain parquet table.
+    ``prefilter="bloom"`` applies the broadcast Bloom prefilter before the
+    keep-side anti-join — identical output, shuffle volume proportional to
+    the match fraction instead of the table.
 
-    ``prefilter="bloom"`` (parquet path only; Delta MERGE file-prunes on its
-    own) applies the broadcast Bloom prefilter before the keep-side
-    anti-join — identical output, shuffle volume proportional to the match
-    fraction instead of the table.
-
-    The parquet path reads ``updates`` once, through the same RDD-backed
-    leaf as :func:`merge_upsert_partitioned`: the staging write and the
-    overlap stats would otherwise each re-plan and re-run its lineage.
+    ``updates`` is read once, through the same RDD-backed leaf as
+    :func:`merge_upsert_partitioned`: the staging write and the overlap
+    stats would otherwise each re-plan and re-run its lineage.
     """
     order_cols = order_cols or [F.col(key_cols[0])]
-    if backend not in ("auto", "delta", "parquet"):
-        raise ValueError(f"unknown merge backend {backend!r}")
-    if backend == "delta" and not delta_available(spark):
-        raise RuntimeError(
-            "merge_upsert(backend='delta') requires the delta-spark package "
-            "and a session built with the Delta SQL extension (session.get_spark)"
-        )
-    use_delta = backend == "delta"
-    if backend == "auto" and delta_available(spark):
-        # don't silently convert an existing parquet target
-        from delta.tables import DeltaTable
-
-        use_delta = not os.path.exists(target_path) or DeltaTable.isDeltaTable(
-            spark, target_path
-        )
-    if use_delta:
-        return _merge_upsert_delta(
-            spark, target_path, updates, key_cols, order_cols, collect_stats
-        )
-
     exists = os.path.exists(target_path)
     target = spark.read.parquet(target_path) if exists else None
     staging = f"{target_path}.__staging__{uuid.uuid4().hex[:8]}"
@@ -273,196 +171,117 @@ def merge_upsert(
 
 
 # ----------------------------------------------------------------------
-# Crash-atomic pointer layout for the partitioned merge (VERDICT r13 item 2)
+# Crash-atomic layout for the partitioned merge (VERDICT r13 item 2)
 #
 #   target_path/
-#       CURRENT             <- pointer file: name of the live view dir
-#       v-<seq>-<uuid>/     <- immutable VIEW: hive-named partition dirs,
-#                              each a RELATIVE SYMLINK into data/
-#       data/<uuid>/        <- immutable per-commit data (the staging write)
+#       _commits/c-<seq>    <- commit log (streaming/store.py): each entry
+#                              names one view dir
+#       v-<seq>-<uuid>/     <- immutable VIEW: one file, _VIEW_MANIFEST.json,
+#                              mapping hive partition-dir name → the
+#                              target-relative data dir holding it
+#       data/<uuid>/        <- immutable per-commit data (the staged write)
 #
-# A commit materializes the batch's partitions under data/, builds a fresh
-# view dir whose symlinks mix the new partitions with the previous view's
+# A commit materializes the batch's partitions under data/, writes a fresh
+# view whose mapping mixes the new partitions with the previous view's
 # untouched ones, and then performs exactly ONE committing operation: an
-# atomic ``os.replace`` of the pointer (the streaming/store.py pattern). A
-# crash at any earlier point — including between two partition links, the
-# window the legacy in-place swap could not survive — leaves readers on the
-# previous pointer and therefore a fully consistent snapshot; orphans are
-# GC'd by the next successful commit. Readers resolve the pointer and scan
-# one immutable hive-layout directory (partition discovery and pruning work
-# unchanged through directory symlinks on a POSIX filesystem). Same scope
-# note as the store: atomic rename ⇒ local/POSIX or HDFS-like; on object
-# stores use the Delta MERGE path.
-#
-# MANIFEST view variant (r15, VERDICT r14 item 5): object stores and some
-# network filesystems have no symlinks, so a view can instead be a dir
-# holding ONE file, ``_VIEW_MANIFEST.json`` — a JSON mapping of hive
-# partition-dir name → target-relative data path ("data/<commit>/day=x").
-# Readers resolve partitions through the mapping instead of the directory
-# tree; everything else (immutable data commits, one pointer replace as
-# the only committing operation, post-commit GC) is identical, and both
-# view formats are readable at any time — a table can even mix formats
-# across versions. ``layout="auto"`` (the default) probes os.symlink once
-# per commit and falls back to the manifest, so the same code path works
-# on POSIX and symlink-free filesystems.
-#
-# POINTER COMMIT (r16, VERDICT r15 item 1): the pointer put itself no
-# longer assumes atomic rename either — it routes through
-# streaming/store.py put_pointer, whose "auto" strategy probes os.replace
-# per commit and falls back to the CAS commit log (_commits/c-<seq>,
-# committed by EXCLUSIVE CREATE = conditional put / If-None-Match on a
-# real object store). With layout="manifest" + the CAS strategy the whole
-# commit path is rename-free AND symlink-free: stage immutable data,
-# write one manifest file, put-if-absent one log entry.
+# exclusive create of the next log entry (a conditional put on an object
+# store). A crash at any earlier point — including mid-manifest — leaves
+# readers on the previous entry and therefore a fully consistent snapshot;
+# orphans are GC'd by the next successful commit. Readers resolve the log
+# and scan the mapped partition dirs as ONE relation.
 
-_PT_POINTER = "CURRENT"
 _PT_DATA = "data"
 _PT_MANIFEST = "_VIEW_MANIFEST.json"
 
 
-def _symlinks_supported(root: str) -> bool:
-    probe = os.path.join(root, f".__lnprobe__{uuid.uuid4().hex[:8]}")
-    try:
-        os.symlink(".", probe)
-    except (OSError, NotImplementedError):
-        return False
-    else:
-        os.remove(probe)
-        return True
-
-
-def _view_mapping(target_path: str, view_dir: str, prefix: str) -> dict[str, str]:
-    """partition-dir name → target-relative data path, from EITHER view
-    format (symlink dirs or _VIEW_MANIFEST.json)."""
-    mpath = os.path.join(view_dir, _PT_MANIFEST)
-    if os.path.exists(mpath):
-        with open(mpath) as f:
-            return {k: v for k, v in json.load(f).items() if k.startswith(prefix)}
-    out = {}
-    for name in os.listdir(view_dir):
-        p = os.path.join(view_dir, name)
-        if not name.startswith(prefix):
-            continue
-        if os.path.islink(p):
-            resolved = os.path.normpath(os.path.join(view_dir, os.readlink(p)))
-            out[name] = os.path.relpath(resolved, target_path)
-        elif os.path.isdir(p):
-            # hand-migrated real dir inside a view: target-relative via the
-            # view itself (the writer re-homes it into data/ on next touch)
-            out[name] = os.path.relpath(p, target_path)
-    return out
-
-
-def _read_view_df(
-    spark: SparkSession, target_path: str, view_dir: str
-) -> DataFrame:
-    """The view as a DataFrame, either format. Symlink views scan as one
-    hive directory; manifest views group partitions by data commit (shared
-    basePath ⇒ hive partition-column discovery per group) and union —
-    group count is bounded by live commits, which GC keeps at ≤ the number
-    of merges since each partition's last rewrite."""
-    mpath = os.path.join(view_dir, _PT_MANIFEST)
-    if not os.path.exists(mpath):
-        return spark.read.option("basePath", view_dir).parquet(view_dir)
-    with open(mpath) as f:
+def _view_mapping(view_dir: str) -> dict[str, str]:
+    """partition-dir name → target-relative data path of a view, validated:
+    every key is ``<col>=…`` for one partition column and is the basename
+    of its path. An empty mapping (a commit always maps ≥1 partition) or a
+    malformed entry is a hand-edited or corrupt view."""
+    with open(os.path.join(view_dir, _PT_MANIFEST)) as f:
         mapping = json.load(f)
     if not mapping:
-        # a commit always maps >=1 touched partition, so an empty manifest
-        # is a hand-truncated/corrupt view — indexing dfs[0] below would
-        # surface it as a bare IndexError (r16 ADVICE)
         raise RuntimeError(
-            f"partitioned merge view {view_dir}: _VIEW_MANIFEST.json maps no "
-            "partitions — corrupt or hand-truncated view. Restore CURRENT "
-            "to the latest intact v-*/ dir or delete the table to reset."
+            f"partitioned merge view {view_dir}: {_PT_MANIFEST} maps no "
+            "partitions — corrupt or hand-truncated view. Restore the top "
+            "_commits/c-* entry to the latest intact v-*/ dir or delete the "
+            "table to reset."
         )
-    groups: dict[str, list[str]] = {}
+    col = next(iter(mapping)).split("=", 1)[0]
     for name, rel in mapping.items():
-        commit_root = os.path.dirname(os.path.join(target_path, rel))
-        groups.setdefault(commit_root, []).append(os.path.join(target_path, rel))
-    dfs = [
-        spark.read.option("basePath", root).parquet(*sorted(paths))
-        for root, paths in sorted(groups.items())
-    ]
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out
+        if not name.startswith(f"{col}=") or os.path.basename(rel) != name:
+            raise RuntimeError(
+                f"partitioned merge view {view_dir}: malformed entry "
+                f"{name!r} → {rel!r} — every key must be {col}=<value> and "
+                "name the basename of its data path"
+            )
+    return mapping
+
+
+def _read_view_df(spark: SparkSession, target_path: str, view_dir: str) -> DataFrame:
+    """The view as ONE relation over every mapped partition dir. The dirs
+    live under different data commits, which partition discovery would
+    reject as conflicting directory structures; ``ignoreInvalidPartitionPaths``
+    drops the commit-id path segment, so the partition column comes from
+    each ``col=value`` leaf, and _view_mapping has already refused any
+    entry that option could silently skip."""
+    mapping = _view_mapping(view_dir)
+    return (
+        spark.read.option("basePath", os.path.join(target_path, _PT_DATA))
+        .option("ignoreInvalidPartitionPaths", "true")
+        .parquet(*sorted(os.path.join(target_path, rel) for rel in mapping.values()))
+    )
 
 
 def resolve_partitioned_path(target_path: str) -> str | None:
-    """Readable root of a partitioned merge target: the live view dir for
-    pointer-layout tables (either commit mechanism — CURRENT file or CAS
-    commit log, streaming/store.py), the path itself for legacy plain-hive
-    tables, None if nothing committed/written yet."""
-    from ..streaming.store import pointer_exists, resolve_pointer_name
-
-    if pointer_exists(target_path):
-        version = resolve_pointer_name(target_path)
-        if version is None:
-            # torn/empty pointer: joining "" would resolve to the RAW root
-            # (data/ + v-*/ mixed), which readers must never scan
-            return None
-        d = os.path.join(target_path, version)
-        return d if os.path.isdir(d) else None
-    return target_path if os.path.isdir(target_path) else None
+    """The live view dir of a partitioned merge target, or None if nothing
+    is committed yet (or the commit log is corrupt)."""
+    return store_version_dir(target_path)
 
 
 def read_partitioned_table(spark: SparkSession, target_path: str) -> DataFrame | None:
-    """The live snapshot of a partitioned merge target (any layout — legacy
-    plain-hive, symlink view, or manifest view), or None if the table
-    doesn't exist yet."""
+    """The live snapshot of a partitioned merge target, or None if the
+    table doesn't exist yet."""
     d = resolve_partitioned_path(target_path)
-    if d is None:
-        return None
-    if os.path.exists(os.path.join(d, _PT_MANIFEST)):
-        return _read_view_df(spark, target_path, d)
-    return spark.read.parquet(d)
+    return _read_view_df(spark, target_path, d) if d is not None else None
 
 
-def _pt_next_version(target_path: str, prev_view: str | None) -> str:
-    seq = 0
-    if prev_view is not None:
-        name = os.path.basename(prev_view)
-        try:
-            seq = int(name.split("-")[1]) + 1
-        except (IndexError, ValueError):
-            seq = 1
-    return f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+def _check_not_plain_dir(target_path: str) -> None:
+    """Refuse a fresh commit over a directory this layout did not create
+    (e.g. a plain ``partitionBy`` write): its readers scan the directory
+    itself and would never see the committed views."""
+    if not os.path.isdir(target_path):
+        return
+    foreign = sorted(
+        n for n in os.listdir(target_path)
+        if n not in (_PT_DATA, _COMMITLOG) and not n.startswith("v-")
+    )
+    if foreign:
+        raise ValueError(
+            f"partitioned merge target {target_path} is an existing directory "
+            f"with no commit log (holds {foreign[0]!r}) — not a partitioned "
+            "merge table. Merge into a new path instead."
+        )
 
 
 def _merge_partitions_pointer(
     target_path: str,
     merged: DataFrame,
     partition_col: str,
-    touched: list,
     prev_view: str | None,
-    layout: str = "auto",
-    pointer_strategy: str = "auto",
 ) -> None:
     """Commit ``merged`` (the touched partitions' full new contents) plus
-    the previous view's untouched partitions as one new immutable view,
-    then move the pointer. Crash-atomic: the pointer replace is the only
-    mutation readers can observe. ``layout``: "symlink" | "manifest" |
-    "auto" (probe os.symlink, fall back to the manifest — the symlink-free
-    format for object-store-like filesystems)."""
+    the previous view's untouched partitions as one new immutable view.
+    Crash-atomic: the log entry is the only mutation readers can observe."""
     data_root = os.path.join(target_path, _PT_DATA)
-    os.makedirs(data_root, exist_ok=True)
-    commit_id = uuid.uuid4().hex[:8]
-    data_dir = os.path.join(data_root, commit_id)
+    data_dir = os.path.join(data_root, uuid.uuid4().hex[:8])
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(data_dir)
 
-    if layout == "auto":
-        layout = "symlink" if _symlinks_supported(target_path) else "manifest"
-    if layout not in ("symlink", "manifest"):
-        raise ValueError(f"unknown partitioned-merge layout {layout!r}")
-
-    version = _pt_next_version(target_path, prev_view)
-    view_dir = os.path.join(target_path, version)
-    os.makedirs(view_dir)
     # The staged write's OWN directory names define the touched set — the
     # hive writer percent-escapes special chars (':', '%', '=', …), so a
     # name constructed from str(value) can silently miss the staged dir
-    # (new data dropped, stale data relinked). Every staged dir is, by
+    # (new data dropped, stale data re-mapped). Every staged dir is, by
     # construction, exactly the touched partitions' new contents.
     prefix = f"{partition_col}="
     staged = {
@@ -470,71 +289,30 @@ def _merge_partitions_pointer(
         for name in os.listdir(data_dir)
         if name.startswith(prefix) and os.path.isdir(os.path.join(data_dir, name))
     }
-    # the new view's mapping: partition dir name -> target-relative data
-    # path. Untouched partitions re-point at the PREVIOUS view's data
-    # (mapping read from either view format); touched ones at this commit.
-    mapping: dict[str, str] = {}
-    if prev_view is not None:
-        for name, rel in _view_mapping(target_path, prev_view, prefix).items():
-            if name in staged:
-                continue
-            src = os.path.join(target_path, rel)
-            if os.path.commonpath([os.path.abspath(src), os.path.abspath(data_root)]) != os.path.abspath(data_root):
-                # a REAL directory inside a view (hand-migrated table):
-                # pointing through the view would dangle once GC drops it —
-                # preserve the data as its own immutable migrated commit
-                # (hardlink tree, the store.py migration precedent)
-                from ..streaming.store import _link_tree
-
-                mig = os.path.join(data_root, f"mig-{uuid.uuid4().hex[:8]}")
-                os.makedirs(mig)
-                _link_tree(src, os.path.join(mig, name))
-                rel = os.path.relpath(os.path.join(mig, name), target_path)
-            mapping[name] = rel
+    # untouched partitions keep the PREVIOUS view's data; touched ones map
+    # to this commit
+    mapping = {
+        name: rel
+        for name, rel in (_view_mapping(prev_view) if prev_view else {}).items()
+        if name not in staged
+    }
     for name in staged:
         mapping[name] = os.path.relpath(os.path.join(data_dir, name), target_path)
 
-    if layout == "symlink":
-        for name, rel in mapping.items():
-            os.symlink(
-                os.path.relpath(os.path.join(target_path, rel), view_dir),
-                os.path.join(view_dir, name),
-            )
-    else:
-        mpath = os.path.join(view_dir, _PT_MANIFEST)
-        with open(mpath, "w") as f:
-            json.dump(mapping, f, indent=0, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
+    version = _next_version(prev_view)
+    view_dir = os.path.join(target_path, version)
+    os.makedirs(view_dir)
+    with open(os.path.join(view_dir, _PT_MANIFEST), "w") as f:
+        json.dump(mapping, f, indent=0, sort_keys=True)
+        f.flush()
+        os.fsync(f.fileno())
 
-    # THE commit: one pointer put — atomic replace on POSIX, or the CAS
-    # commit-log exclusive create where rename isn't atomic/available
-    # (streaming/store.py put_pointer; strategy "auto" probes per commit).
-    from ..streaming.store import _gc_commitlog, put_pointer
-
-    put_pointer(target_path, version, pointer_strategy)
-    _gc_commitlog(target_path, version)
-
-    # GC (post-commit, store.py precedent): drop view dirs other than the
-    # one just committed and data commits it no longer references. Readers
-    # resolve the pointer at read time; the single-writer contract makes
+    # THE commit (one log entry), then the store's GC of older log entries
+    # and view dirs; then drop data commits the new view no longer maps.
+    # Readers resolve the log at read time; the single-writer contract makes
     # post-commit GC safe for the sequential reader/writer harness.
-    live_data = set()
-    for rel in mapping.values():
-        resolved = os.path.normpath(os.path.join(target_path, rel))
-        drel = os.path.relpath(resolved, data_root)
-        live_data.add(drel.split(os.sep)[0])
-    for name in os.listdir(target_path):
-        p = os.path.join(target_path, name)
-        if name.startswith("v-") and name != version and os.path.isdir(p):
-            shutil.rmtree(p, ignore_errors=True)
-        elif name.startswith(
-            (f"{_PT_POINTER}.__tmp__", f".{_PT_POINTER}.tmp.")
-        ):  # crashed writers (legacy + put_pointer tmp namings)
-            try:
-                os.remove(p)
-            except OSError:
-                pass
+    _commit_pointer(target_path, version, keep=1)
+    live_data = {rel.split(os.sep)[1] for rel in mapping.values()}
     for name in os.listdir(data_root):
         if name not in live_data:
             shutil.rmtree(os.path.join(data_root, name), ignore_errors=True)
@@ -548,15 +326,8 @@ def merge_upsert_partitioned(
     partition_col: str,
     order_cols: list[Column] | None = None,
     prefilter: str = "none",
-    layout: str = "auto",
-    pointer_strategy: str = "auto",
 ) -> list[str]:
     """Partition-pruned upsert into a hive-partitioned Parquet table.
-
-    ``layout`` picks the pointer view format for this commit: "symlink"
-    (POSIX), "manifest" (symlink-free, object-store-safe), or "auto"
-    (probe; the default). Both formats interoperate — readers handle
-    either, per version.
 
     The whole-table ``merge_upsert`` rewrite is O(table) per batch — wrong
     cost model at 100 TB. This variant implements what Delta MERGE's file
@@ -567,18 +338,16 @@ def merge_upsert_partitioned(
 
     Requirements: the partition column must be a stable string/date key.
 
-    Atomicity (r14, VERDICT r13 item 2): tables CREATED by this function
-    use the pointer layout above — the commit is one atomic pointer
-    rename, so a crash anywhere mid-merge (including between two
-    partitions) leaves readers on the previous snapshot, matching the
-    reference's per-doc-atomic Mongo upsert (database/data_migration.py:
+    Atomicity (r14, VERDICT r13 item 2): the table uses the manifest-view
+    layout above — the commit is one exclusive-create log entry, so a crash
+    anywhere mid-merge leaves readers on the previous snapshot, matching
+    the reference's per-doc-atomic Mongo upsert (database/data_migration.py:
     102-158) at whole-commit granularity. Read the table back with
-    :func:`read_partitioned_table` (or scan the dir
-    :func:`resolve_partitioned_path` returns). A target that already
-    exists as a PLAIN hive directory (e.g. written by ``partitionBy``
-    directly) keeps the legacy in-place per-partition swap — atomic per
-    partition dir only, the documented relaxation — rather than silently
-    migrating a layout the caller's readers point at.
+    :func:`read_partitioned_table`. A target that already exists as a
+    directory without a commit log (e.g. written by ``partitionBy``
+    directly) is refused with ``ValueError``; a commit log that names no
+    view raises ``StoreCorruptPointerError`` rather than committing as if
+    fresh.
 
     One-time batch materialization: ``updates`` is evaluated once, before
     latest-wins, into an RDD-backed leaf (:func:`_materialized`), released
@@ -609,75 +378,31 @@ def merge_upsert_partitioned(
         if not touched:
             return []
         # A NULL partition value would be written as __HIVE_DEFAULT_PARTITION__
-        # in staging, but the swap/link loops below build "col=None" paths
-        # (never found → rows silently dropped) and isin(touched) can't prune
-        # NULLs. Callers must coalesce to a sentinel first (stream_ingest does).
+        # in staging, and isin(touched) can't prune NULLs. Callers must
+        # coalesce to a sentinel first (stream_ingest does).
         if any(v is None for v in touched):
             raise ValueError(
                 f"merge_upsert_partitioned: NULL values in partition column "
                 f"{partition_col!r}; coalesce to a sentinel before merging"
             )
 
-        from ..streaming.store import pointer_exists
-
-        pointer_mode = pointer_exists(target_path) or not os.path.isdir(target_path)
-        read_root = resolve_partitioned_path(target_path)
-        if read_root is None and os.path.exists(os.path.join(target_path, _PT_POINTER)):
-            # ADVICE r14 (medium): CURRENT exists but resolves to nothing —
-            # empty/torn write or dangling view name. Treating the table as
-            # fresh would commit merged=deduped and post-commit GC would then
-            # delete every prior view/data commit: recoverable pointer
-            # corruption turned into silent loss of all untouched partitions.
-            # Readers stay safely on None; the WRITER must refuse.
-            raise RuntimeError(
-                f"partitioned merge target {target_path}: CURRENT exists but "
-                "names no view directory — refusing to commit as if the table "
-                "were fresh. Restore CURRENT to the latest intact v-*/ dir or "
-                "delete the table directory to reset."
-            )
-        if read_root is not None and os.path.isdir(read_root) and os.listdir(read_root):
-            target = (
-                _read_view_df(spark, target_path, read_root)
-                if pointer_mode
-                else spark.read.option("basePath", read_root).parquet(read_root)
-            )
-            # partition pruning: only touched partition directories are scanned;
-            # within them, the optional Bloom prefilter skips the anti-join for
-            # keys the batch provably doesn't carry.
+        # ADVICE r14 (medium): a log that names no view must fail the
+        # WRITER — treating the table as fresh would commit merged=deduped
+        # and post-commit GC would then delete every prior view/data
+        # commit. Readers stay safely on None.
+        prev_view = _version_dir_for_write(target_path)
+        if prev_view is None:
+            _check_not_plain_dir(target_path)
+            merged = deduped
+        else:
+            # partition pruning: only touched partition directories are
+            # scanned; within them, the optional Bloom prefilter skips the
+            # anti-join for keys the batch provably doesn't carry.
+            target = _read_view_df(spark, target_path, prev_view)
             affected = target.filter(F.col(partition_col).isin(touched))
             kept = _kept_rows(affected, deduped, key_cols, prefilter)
             merged = kept.unionByName(deduped.select(*kept.columns))
-            prev_view = read_root if pointer_mode else None
-        else:
-            merged = deduped
-            prev_view = None
-
-        if pointer_mode:
-            _merge_partitions_pointer(
-                target_path, merged, partition_col, touched, prev_view, layout,
-                pointer_strategy,
-            )
-            return sorted(str(v) for v in touched)
-
-        # legacy plain-hive target: in-place per-partition swap (see docstring).
-        # Swap the dirs the staged write actually PRODUCED (hive-escaped names)
-        # — constructing "col=str(value)" misses any value the writer escapes
-        # (same fix as the pointer path).
-        staging = f"{target_path}.__staging__{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-
-        os.makedirs(target_path, exist_ok=True)
-        for part_dir in sorted(os.listdir(staging)):
-            src = os.path.join(staging, part_dir)
-            if not part_dir.startswith(f"{partition_col}=") or not os.path.isdir(src):
-                continue
-            dst = os.path.join(target_path, part_dir)
-            backup = f"{dst}.__old__{uuid.uuid4().hex[:8]}"
-            if os.path.exists(dst):
-                os.rename(dst, backup)
-            os.rename(src, dst)
-            shutil.rmtree(backup, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
+        _merge_partitions_pointer(target_path, merged, partition_col, prev_view)
         return sorted(str(v) for v in touched)
 
 

@@ -1252,8 +1252,8 @@ def q162_contamination_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # q163 — MANIFEST-LAYOUT partitioned merge under the oracle gate (r15,
 # VERDICT r14 item 5): two keyed upserts into a source-partitioned table
-# committed through the symlink-FREE manifest views (the object-store
-# format), read back through the manifest resolver, aggregated — the
+# committed through manifest views and the commit log (the one, rename-
+# and symlink-free, commit protocol), read back as one relation — the
 # oracle states the latest-wins result over the same two logical batches
 # with no store at all, so the driver proves the layout's read/merge
 # equivalence every round.
@@ -1276,15 +1276,13 @@ def q163_partitioned_merge_manifest(spark: SparkSession, sf_dir: str) -> DataFra
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     target = tempfile.mkdtemp(prefix="q163_pm_") + "/t"
     merge_upsert_partitioned(
-        spark, target, d, key_cols=["doc_id"], partition_col="source",
-        layout="manifest",
+        spark, target, d, key_cols=["doc_id"], partition_col="source"
     )
     b2 = d.filter(F.col("doc_id") % 5 == 0).withColumn(
         "n_chars", F.col("n_chars") + 1000
     )
     merge_upsert_partitioned(
-        spark, target, b2, key_cols=["doc_id"], partition_col="source",
-        layout="manifest",
+        spark, target, b2, key_cols=["doc_id"], partition_col="source"
     )
     t = read_partitioned_table(spark, target)
     return t.groupBy("source").agg(

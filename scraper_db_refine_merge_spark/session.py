@@ -24,7 +24,7 @@ from pyspark.sql import SparkSession
 def get_spark(app_name: str = "scraper_db_refine_merge_spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     shuffle_partitions = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(int(cpus), 32)))
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", shuffle_partitions)
@@ -51,20 +51,5 @@ def get_spark(app_name: str = "scraper_db_refine_merge_spark") -> SparkSession:
         # context creation, so it lives here, not at the call site.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    # Delta Lake (transactional MERGE backend for operators/merge.py) when
-    # the delta-spark package is present; plain sessions otherwise.
-    try:
-        from delta import configure_spark_with_delta_pip
-
-        builder = configure_spark_with_delta_pip(
-            builder.config(
-                "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-            ).config(
-                "spark.sql.catalog.spark_catalog",
-                "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-            )
-        )
-    except ImportError:
-        pass
-    return builder.getOrCreate()

@@ -4,63 +4,46 @@
 The r4 pattern — rename(target, backup); rename(staging, target) — had a
 crash window between the two renames that left the store MISSING with
 orphaned backup/staging dirs (ADVICE r4). This store has exactly ONE
-committing operation:
+committing operation, and it is neither a rename nor a symlink:
 
     target_path/
-        CURRENT              <- pointer file: name of the live version dir
-        v-<uuid>/            <- immutable parquet snapshot (+ marker files)
+        _commits/c-<seq>     <- commit log: each entry names one snapshot
+        v-<seq>-<uuid>/      <- immutable parquet snapshot (+ marker files)
 
-A writer materializes a new ``v-*`` snapshot, then atomically replaces the
-pointer with ``os.replace`` (atomic on POSIX local filesystems). A crash at
-any earlier point leaves the previous pointer — and therefore the previous
-snapshot — fully intact; orphaned snapshots are garbage-collected by the
-next successful commit. Readers resolve the pointer and read one immutable
-directory, so they can never observe a half-swapped store.
+A writer materializes a new ``v-*`` snapshot, then commits seq N as an
+EXCLUSIVE CREATE of ``_commits/c-<N>`` (``O_CREAT|O_EXCL`` here; a
+conditional put / If-None-Match on an object store — the put-if-absent
+primitive S3/GCS/ABFS all expose, and the one Delta Lake's S3 LogStore
+builds on). A crash at any earlier point leaves the previous entry — and
+therefore the previous snapshot — fully intact; orphaned snapshots are
+garbage-collected by the next successful commit. Readers resolve the
+HIGHEST INTACT entry and read one immutable directory, so they can never
+observe a half-swapped store. Entries are immutable once written, so a
+crashed writer leaves at worst an empty or dangling TOP entry, which
+resolution skips: the entry below it still IS the committed state.
 
-Pointer commit strategies (r16, VERDICT r15 item 1 — the last POSIX
-assumption in the 100 TB story):
-
-- ``replace`` — write ``.CURRENT.tmp.*`` + fsync + ONE atomic
-  ``os.replace`` onto ``CURRENT`` (local/POSIX, HDFS-like).
-- ``cas`` — object-store form, NO rename anywhere: an append-only commit
-  log ``_commits/c-<seq>`` where committing seq N is an EXCLUSIVE CREATE
-  of ``c-<N>`` (``O_CREAT|O_EXCL`` here; conditional put / If-None-Match
-  on a real object store — the put-if-absent primitive S3/GCS/ABFS all
-  expose, and the same one Delta Lake's S3 LogStore builds on). Readers
-  resolve the HIGHEST INTACT entry: entries are immutable once written,
-  so a crashed writer leaves at worst an empty/dangling TOP entry, which
-  resolution skips — the previous entry still IS the committed state
-  (append-only logs make crash fallback trivially safe where a torn
-  REPLACED pointer needs manual recovery). The exclusive create is also
-  the single-writer check: two writers deriving the same next seq from
-  the same prior snapshot collide on the same entry name and the loser
-  raises ``StoreConcurrentWriterError`` at create time, BEFORE its state
-  becomes visible (strictly stronger than the replace strategy's
-  after-the-fact re-read).
-- ``auto`` (default) — probe ``os.replace`` on a scratch file per commit
-  (the ``layout="auto"`` symlink-probe pattern); stick with ``cas`` once
-  a store has a commit log, so a table created on an object store keeps
-  one mechanism even when later written from a POSIX host. Both
-  mechanisms interoperate per commit: resolution compares the CURRENT
-  file and the log and the higher seq wins.
+A log with NO intact entry is either fresh (empty, or a first commit,
+``c-000001``, torn before its content landed) or corrupt (any other
+entry: a committed entry was truncated or its snapshot removed). Readers
+see None either way; writers refuse a corrupt log with
+``StoreCorruptPointerError`` instead of committing as if fresh, which
+would let post-commit GC delete every prior snapshot.
 
 SINGLE-WRITER CONTRACT (ADVICE r5): at most one committer per store at a
-time. Two concurrent commits could derive the same seq from the same prior
-pointer (breaking ``store_read_version`` disambiguation and orphan-GC
-reasoning) and the loser's read-modify-write merge would be silently
-discarded. The commit section cheaply enforces this: after the pointer
-replace it re-reads CURRENT and raises ``StoreConcurrentWriterError`` if
-the pointer is not the version it just committed — a lost update becomes a
-loud failure instead of silent state corruption. Streaming callers satisfy
-the contract by construction (foreachBatch serializes batches); batch
-callers (fold_components, fold_minhash_index, fold_rollup) own one store
-per pipeline.
+time. Two concurrent commits would derive the same seq from the same prior
+snapshot and the loser's read-modify-write merge would be silently
+discarded. The exclusive create enforces this cheaply: the two writers
+collide on the same entry name and the loser raises
+``StoreConcurrentWriterError`` at create time, BEFORE its state becomes
+visible. Streaming callers satisfy the contract by construction
+(foreachBatch serializes batches); batch callers (fold_components,
+fold_minhash_index, fold_rollup) own one store per pipeline.
 
 Incremental multi-part snapshots (ADVICE r5): ``store_commit_parts``
 appends ONLY the new batch's rows as immutable part directories under
 ``parts/`` and commits a MANIFEST listing the accumulated parts per table
-— per-commit write I/O is O(batch), not O(total state), while the pointer
-replace remains the single atomic operation. GC keeps every part
+— per-commit write I/O is O(batch), not O(total state), while the log
+entry remains the single committing operation. GC keeps every part
 referenced by a retained manifest.
 """
 
@@ -73,27 +56,28 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-_POINTER = "CURRENT"
 _MANIFEST = "_MANIFEST.json"
 _PARTS = "parts"
 _COMMITLOG = "_commits"
 
 
 class StoreConcurrentWriterError(RuntimeError):
-    """Another writer moved CURRENT during our commit — the single-writer
-    contract was violated and this writer's merge may be lost."""
+    """Another writer committed the seq this writer derived — the
+    single-writer contract was violated and this writer's merge may be
+    lost."""
 
 
 class StoreCorruptPointerError(RuntimeError):
-    """CURRENT exists but resolves to no snapshot (empty/torn write or a
-    dangling version name). Writers must NOT treat this as a fresh store:
-    committing would produce a truncated snapshot and post-commit GC would
-    then delete every prior commit — recoverable corruption (restore the
-    pointer to the latest intact v-*/ dir) turned into permanent loss."""
+    """The commit log holds entries but none names a snapshot (a truncated
+    committed entry or a removed snapshot dir). Writers must NOT treat this
+    as a fresh store: committing would produce a truncated snapshot and
+    post-commit GC would then delete every prior commit — recoverable
+    corruption (restore the entry's snapshot name) turned into permanent
+    loss."""
 
 
 def _commitlog_entries(target_path: str) -> list[tuple[int, str]]:
-    """CAS commit-log entries as (seq, filename), ascending."""
+    """Commit-log entries as (seq, filename), ascending."""
     d = os.path.join(target_path, _COMMITLOG)
     if not os.path.isdir(d):
         return []
@@ -108,55 +92,32 @@ def _commitlog_entries(target_path: str) -> list[tuple[int, str]]:
     return sorted(out)
 
 
-def pointer_exists(target_path: str) -> bool:
-    """Has EITHER commit mechanism ever touched this path? (The writer-side
-    'this is a pointer table' test — counterpart of os.path.exists(CURRENT)
-    from before the CAS strategy existed.)"""
-    return os.path.exists(os.path.join(target_path, _POINTER)) or bool(
-        _commitlog_entries(target_path)
-    )
+def _resolve(target_path: str) -> tuple[str | None, bool]:
+    """(committed version name or None, whether the log is corrupt).
 
-
-def resolve_pointer_name(target_path: str) -> str | None:
-    """Committed version NAME via either mechanism, or None.
-
-    The CURRENT file and the commit log each yield one candidate; the
-    higher seq wins (mixed-mechanism histories interoperate per commit).
-    A torn/empty/dangling CURRENT file resolves the whole store to None —
-    replace-mode corruption stays strict (writers then refuse via
-    ``_version_dir_for_write``). Crashed TOP log entries (empty content /
-    naming no directory) are SKIPPED down to the last intact entry: the
-    log is append-only, so an incomplete top entry means that commit never
-    finished and the previous entry is the true committed state."""
-    cand: list[tuple[int, str]] = []
-    pointer = os.path.join(target_path, _POINTER)
-    if os.path.exists(pointer):
-        with open(pointer) as f:
-            version = f.read().strip()
-        # torn/empty pointer: os.path.join(target, "") IS the store root,
-        # which isdir() would happily bless — never hand that to a reader
-        if not version or not os.path.isdir(os.path.join(target_path, version)):
-            return None
-        cand.append((_seq_of(version) or 0, version))
+    Walks the log down from the top and returns the first INTACT entry —
+    non-empty content naming an existing directory (content "" would join
+    to the store root itself, which isdir() would happily bless). Torn top
+    entries are skipped: the log is append-only, so an incomplete top
+    entry means that commit never finished. With no intact entry the log
+    is fresh only if it is empty or holds just a torn first commit; any
+    other entry once committed something that is gone now."""
     log_dir = os.path.join(target_path, _COMMITLOG)
+    torn = []
     for seq, name in reversed(_commitlog_entries(target_path)):
         with open(os.path.join(log_dir, name)) as f:
             version = f.read().strip()
         if version and os.path.isdir(os.path.join(target_path, version)):
-            cand.append((seq, version))
-            break
-    if not cand:
-        return None
-    return max(cand)[1]
+            return version, False
+        torn.append((seq, version))
+    return None, torn not in ([], [(1, "")])
 
 
 def store_version_dir(target_path: str) -> str | None:
-    """Absolute path of the live snapshot dir, or None if no commit yet."""
-    version = resolve_pointer_name(target_path)
-    if version is None:
-        return None
-    d = os.path.join(target_path, version)
-    return d if os.path.isdir(d) else None
+    """Absolute path of the live snapshot dir, or None if no commit yet
+    (or the log is corrupt — readers never guess)."""
+    version = _resolve(target_path)[0]
+    return os.path.join(target_path, version) if version else None
 
 
 def store_exists(target_path: str) -> bool:
@@ -224,25 +185,29 @@ def _seq_of(version_name: str) -> int | None:
 
 def _version_dir_for_write(target_path: str) -> str | None:
     """store_version_dir for WRITER paths: raises StoreCorruptPointerError
-    when CURRENT exists but resolves to nothing, instead of letting the
-    writer re-initialize over a corrupted pointer (ADVICE r14, medium).
+    when the log has entries but none resolves, instead of letting the
+    writer re-initialize over a corrupted log (ADVICE r14, medium).
     Readers keep the safe None path in store_version_dir."""
-    d = store_version_dir(target_path)
-    if d is None and os.path.exists(os.path.join(target_path, _POINTER)):
+    version, corrupt = _resolve(target_path)
+    if corrupt:
         raise StoreCorruptPointerError(
-            f"store {target_path}: CURRENT exists but names no snapshot "
+            f"store {target_path}: the commit log names no snapshot "
             "directory — refusing to commit as if the store were fresh. "
-            "Restore CURRENT to the latest intact v-*/ dir (store_versions "
-            "lists candidates) or delete the store directory to reset."
+            "Restore the top _commits/c-* entry to the latest intact v-*/ "
+            "dir or delete the store directory to reset."
         )
-    return d
+    return os.path.join(target_path, version) if version else None
+
+
+def _next_version(prior: str | None) -> str:
+    """Snapshot name for the commit after ``prior`` (a snapshot dir)."""
+    seq = (_seq_of(os.path.basename(prior)) or 0) + 1 if prior else 1
+    return f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
 
 
 def _new_version(target_path: str) -> str:
     os.makedirs(target_path, exist_ok=True)
-    prior = _version_dir_for_write(target_path)
-    seq = (_seq_of(os.path.basename(prior)) or 0) + 1 if prior else 1
-    return f"v-{seq:06d}-{uuid.uuid4().hex[:8]}"
+    return _next_version(_version_dir_for_write(target_path))
 
 
 def _write_markers(vd: str, markers: dict[str, str] | None) -> None:
@@ -259,60 +224,11 @@ def _manifest_of(vd: str) -> dict[str, list[str]] | None:
         return json.load(f)
 
 
-def _replace_supported(root: str) -> bool:
-    """Probe atomic rename on this filesystem (the _symlinks_supported
-    pattern from the merge layer): an object-store-like FS — or the
-    crash-injection suites' forbidden-os.replace harness — fails the
-    probe and auto mode falls through to the CAS commit log."""
-    a = os.path.join(root, f".__rpprobe__{uuid.uuid4().hex[:8]}")
-    b = f"{a}.b"
-    try:
-        with open(a, "w") as f:
-            f.write("x")
-        os.replace(a, b)
-    except (OSError, NotImplementedError):
-        for p in (a, b):
-            try:
-                os.remove(p)
-            except OSError:
-                pass
-        return False
-    else:
-        os.remove(b)
-        return True
-
-
-def put_pointer(target_path: str, version: str, strategy: str = "auto") -> None:
-    """Commit ``version`` as the live snapshot name via the chosen
-    strategy (module docstring). The ONLY mutation readers can observe in
-    any commit path — shared by this store and the partitioned-merge
-    pointer layout (operators/merge.py)."""
-    if strategy == "auto":
-        # a store that already has a commit log stays on it (one mechanism
-        # per table even if it moves between filesystems); otherwise keep
-        # the POSIX pointer file wherever atomic rename actually works
-        if _commitlog_entries(target_path) or not _replace_supported(target_path):
-            strategy = "cas"
-        else:
-            strategy = "replace"
-    if strategy == "replace":
-        tmp = os.path.join(target_path, f".{_POINTER}.tmp.{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            f.write(version)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(target_path, _POINTER))
-        with open(os.path.join(target_path, _POINTER)) as f:
-            observed = f.read().strip()
-        if observed != version:
-            raise StoreConcurrentWriterError(
-                f"store {target_path}: pointer moved to {observed!r} during "
-                f"commit of {version!r} — this store is single-writer; the "
-                "competing commit may have merged from a stale snapshot"
-            )
-        return
-    if strategy != "cas":
-        raise ValueError(f"unknown pointer commit strategy {strategy!r}")
+def put_pointer(target_path: str, version: str) -> None:
+    """Commit ``version`` as the live snapshot: an exclusive create of its
+    log entry (module docstring). The ONLY mutation readers can observe in
+    any commit path — shared by this store and the partitioned-merge views
+    (operators/merge.py)."""
     log_dir = os.path.join(target_path, _COMMITLOG)
     os.makedirs(log_dir, exist_ok=True)
     entry = os.path.join(log_dir, f"c-{_seq_of(version) or 0:06d}")
@@ -329,9 +245,9 @@ def put_pointer(target_path: str, version: str, strategy: str = "auto") -> None:
                 "single-writer; this writer merged from a stale snapshot"
             )
         os.remove(entry)
-    # THE commit: exclusive create = conditional put. On a real object
-    # store this maps to If-None-Match; a losing racer fails HERE, before
-    # its snapshot is ever visible.
+    # THE commit: exclusive create = conditional put. On an object store
+    # this maps to If-None-Match; a losing racer fails HERE, before its
+    # snapshot is ever visible.
     fd = os.open(entry, os.O_WRONLY | os.O_CREAT | os.O_EXCL)
     try:
         os.write(fd, version.encode())
@@ -340,61 +256,28 @@ def put_pointer(target_path: str, version: str, strategy: str = "auto") -> None:
         os.close(fd)
 
 
-def _gc_commitlog(target_path: str, committed: str) -> None:
-    """Post-put pointer GC, shared by this store and the merge layer.
-
-    Drops log entries below the committed seq (resolution only ever reads
-    down from the top intact entry; retained-version history lives in the
-    v-*/ dirs themselves, so old entries are pure clutter). Also drops a
-    SUPERSEDED ``CURRENT`` file after a CAS commit (content != the
-    committed version): a replace-history table that switched to the log
-    would otherwise keep a stale CURRENT whose named version the version
-    GC eventually deletes — and a dangling CURRENT reads as corruption
-    (strict None / writer refusal), bricking a healthy store. Removing it
-    is a plain DELETE (object-store-legal) and completes the migration to
-    one mechanism per table."""
+def _commit_pointer(target_path: str, version: str, keep: int) -> None:
+    """THE commit: one log put (``put_pointer``), then GC of log entries
+    below it (resolution only reads down from the top intact entry, and
+    retained history lives in the v-*/ dirs themselves), snapshots beyond
+    the retention window, crashed-writer orphans (seq above the committed
+    entry), and ``parts/`` directories no retained manifest references
+    (best-effort — a concurrent reader holding an old dir open on POSIX
+    keeps its fds)."""
+    put_pointer(target_path, version)
     log_dir = os.path.join(target_path, _COMMITLOG)
-    committed_seq = _seq_of(committed) or 0
     for seq, name in _commitlog_entries(target_path):
-        if seq < committed_seq:
+        if seq < (_seq_of(version) or 0):
             try:
                 os.remove(os.path.join(log_dir, name))
             except OSError:
                 pass
-    pointer = os.path.join(target_path, _POINTER)
-    if os.path.exists(pointer):
-        with open(pointer) as f:
-            content = f.read().strip()
-        if content != committed:
-            try:
-                os.remove(pointer)
-            except OSError:
-                pass
-
-
-def _commit_pointer(
-    target_path: str, version: str, keep: int, strategy: str = "auto"
-) -> None:
-    """THE commit: one pointer put (atomic replace or CAS log entry —
-    ``put_pointer``), then GC of snapshots beyond the retention window,
-    crashed-writer orphans (seq above the committed pointer), stale
-    pointer tmps, superseded commit-log entries, and ``parts/``
-    directories no retained manifest references (best-effort — a
-    concurrent reader holding an old dir open on POSIX keeps its fds)."""
-    put_pointer(target_path, version, strategy)
-    _gc_commitlog(target_path, version)
     keep_names = {version} | {
         name for _, name in sorted(store_versions(target_path), reverse=True)[:keep]
     }
     for name in os.listdir(target_path):
-        full = os.path.join(target_path, name)
         if name.startswith("v-") and name not in keep_names:
-            shutil.rmtree(full, ignore_errors=True)
-        elif name.startswith(f".{_POINTER}.tmp."):
-            try:
-                os.remove(full)
-            except OSError:
-                pass
+            shutil.rmtree(os.path.join(target_path, name), ignore_errors=True)
     # parts GC: drop part dirs referenced by NO retained manifest (orphans
     # from crashed writers and parts owned only by retention-expired
     # snapshots). Parts referenced by any kept version stay — snapshots
@@ -437,10 +320,11 @@ def _sized_for_write(df: DataFrame) -> DataFrame:
     band) — the payoff is the layout contract at scale, where a listing
     is remote I/O and a fold's shuffle output would otherwise inherit
     whatever partition count the plan happened to end with.
-    SPARK_GRAFT_SIZED_WRITE=0 disables (A/B lever, default on).
+    Without AQE nothing would size the exchange; Spark's analyzer then
+    drops the hint (ResolveHints), so the write keeps the frame's own
+    partitioning instead of paying a plain shuffle
+    (test_plan_shape::test_store_write_rebalances_only_under_aqe).
     Row content is untouched — file layout only."""
-    if os.environ.get("SPARK_GRAFT_SIZED_WRITE", "1") == "0":
-        return df
     return df.hint("rebalance")
 
 
@@ -462,9 +346,8 @@ def store_commit(
     target_path: str,
     markers: dict[str, str] | None = None,
     keep: int = 1,
-    pointer_strategy: str = "auto",
 ) -> str:
-    """Write ``df`` as a new snapshot and atomically point CURRENT at it.
+    """Write ``df`` as a new snapshot and commit it with one log entry.
 
     Returns the committed snapshot dir. Marker filenames should start with
     ``_`` so Spark's parquet reader ignores them as metadata files.
@@ -477,7 +360,7 @@ def store_commit(
     vd = os.path.join(target_path, version)
     _sized_for_write(df).write.mode("overwrite").parquet(vd)
     _write_markers(vd, markers)
-    _commit_pointer(target_path, version, keep, pointer_strategy)
+    _commit_pointer(target_path, version, keep)
     return vd
 
 
@@ -486,10 +369,9 @@ def store_commit_many(
     target_path: str,
     markers: dict[str, str] | None = None,
     keep: int = 1,
-    pointer_strategy: str = "auto",
 ) -> str:
     """Commit SEVERAL named tables as ONE atomic snapshot (one version dir
-    with a parquet subdir per name, one pointer replace). The primitive
+    with a parquet subdir per name, one log entry). The primitive
     for multi-table state that must stay mutually consistent — e.g. the
     incremental MinHash index's signatures + shingle sets + pair log,
     where a crash between separate per-table commits would leave pairs
@@ -499,7 +381,7 @@ def store_commit_many(
     for name, df in dfs.items():
         _sized_for_write(df).write.mode("overwrite").parquet(os.path.join(vd, name))
     _write_markers(vd, markers)
-    _commit_pointer(target_path, version, keep, pointer_strategy)
+    _commit_pointer(target_path, version, keep)
     return vd
 
 
@@ -509,7 +391,6 @@ def store_commit_parts(
     markers: dict[str, str] | None = None,
     keep: int = 1,
     replace_parts: dict[str, DataFrame] | None = None,
-    pointer_strategy: str = "auto",
 ) -> str:
     """Incremental multi-part commit (ADVICE r5): write ONLY the new
     batch's rows — one immutable ``parts/p-*`` directory per table — and
@@ -519,7 +400,7 @@ def store_commit_parts(
     Per-commit write I/O is O(new batch), not O(total state) — the fix for
     fold-style callers whose accumulated tables grow with the corpus. The
     atomicity story is unchanged: all tables' new parts land under one
-    manifest behind one pointer replace, so mutually-consistent multi-table
+    manifest behind one log entry, so mutually-consistent multi-table
     state still moves together; a crash before the pointer commit leaves
     only unreferenced part dirs that the next successful commit GCs.
 
@@ -590,20 +471,19 @@ def store_commit_parts(
     with open(os.path.join(vd, _MANIFEST), "w") as f:
         json.dump(manifest, f)
     _write_markers(vd, markers)
-    _commit_pointer(target_path, version, keep, pointer_strategy)
+    _commit_pointer(target_path, version, keep)
     return vd
 
 
 def store_compact(
-    spark: SparkSession, target_path: str, keep: int = 1,
-    pointer_strategy: str = "auto",
+    spark: SparkSession, target_path: str, keep: int = 1
 ) -> str | None:
     """Squash a multi-part store's accumulated parts (r14, VERDICT r13
     item 5): N folds leave N part dirs per table, so replay/read cost grows
     with fold count — fine for a harness, wrong at a year of daily batches.
     Each table whose manifest lists >1 parts is union-read and rewritten as
-    ONE part; the new manifest commits behind the usual single pointer
-    replace, and retention GC reclaims the small parts. Read results are
+    ONE part; the new manifest commits behind the usual single log
+    entry, and retention GC reclaims the small parts. Read results are
     row-identical by construction (readers union the listed parts — the
     union now has one member); markers are carried over so exactly-once
     batch guards survive compaction.
@@ -641,7 +521,7 @@ def store_compact(
         src = os.path.join(prior, fname)
         if fname != _MANIFEST and os.path.isfile(src):
             shutil.copy2(src, os.path.join(vd, fname))
-    _commit_pointer(target_path, version, keep, pointer_strategy)
+    _commit_pointer(target_path, version, keep)
     return vd
 
 

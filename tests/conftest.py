@@ -1,7 +1,5 @@
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from scraper_db_refine_merge_spark.session import get_spark
@@ -19,18 +17,3 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
-
-
-@pytest.fixture(autouse=True)
-def _forbid_os_replace(monkeypatch):
-    """SPARK_GRAFT_FORBID_REPLACE=1 runs the whole suite with os.replace
-    DISABLED (r16, VERDICT r15 item 1) — the object-store simulation for
-    the pointer-commit layer, the way r15 ran it with os.symlink disabled.
-    Every pointer commit's "auto" strategy must then fall through to the
-    CAS commit log; any code path still depending on atomic rename fails
-    loudly here instead of on a real object store."""
-    if os.environ.get("SPARK_GRAFT_FORBID_REPLACE") == "1":
-        def refuse(*a, **k):
-            raise OSError("os.replace forbidden (object-store simulation)")
-
-        monkeypatch.setattr(os, "replace", refuse)

@@ -9,6 +9,11 @@ import os
 import pytest
 
 from scraper_db_refine_merge_spark.operators.merge import merge_upsert, merge_upsert_partitioned
+from scraper_db_refine_merge_spark.streaming.store import (
+    _COMMITLOG,
+    StoreCorruptPointerError,
+    _commitlog_entries,
+)
 
 
 def _persistent_rdds(spark) -> int:
@@ -48,10 +53,11 @@ def test_partitioned_merge_releases_on_null_partition_value(spark, tmp_path):
 def test_partitioned_merge_releases_on_torn_pointer(spark, tmp_path):
     target = str(tmp_path / "pt")
     _partitioned(spark, target, [("e1", "d1", 1.0)])
-    with open(os.path.join(target, "CURRENT"), "w") as f:
-        f.write("")
+    [(_, entry)] = _commitlog_entries(target)
+    with open(os.path.join(target, _COMMITLOG, entry), "w") as f:
+        f.write("v-000001-deadbeef")  # the live entry names no view
     before = _persistent_rdds(spark)
-    with pytest.raises(RuntimeError, match="CURRENT exists but"):
+    with pytest.raises(StoreCorruptPointerError):
         _partitioned(spark, target, [("e9", "d9", 9.0)])
     assert _persistent_rdds(spark) == before
 
@@ -63,6 +69,6 @@ def test_whole_table_merge_releases_its_batch(spark, tmp_path, collect_stats):
     for rows in ([("e1", "d1", 1.0), ("e2", "d2", 2.0)], [("e1", "d1", 5.0), ("e1", "d1", 6.0)]):
         merge_upsert(
             spark, target, _batch(spark, rows), key_cols=["event_id"],
-            collect_stats=collect_stats, backend="parquet",
+            collect_stats=collect_stats,
         )
         assert _persistent_rdds(spark) == before

@@ -1,26 +1,46 @@
-"""Partition-pruned MERGE: only touched partitions are rewritten."""
+"""Partition-pruned MERGE: only touched partitions are rewritten, and every
+commit is one commit-log entry over an immutable manifest view."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from scraper_db_refine_merge_spark.operators.merge import merge_upsert_partitioned
-
-# Tests that crash-inject INSIDE the replace mechanism (os.replace on
-# CURRENT) are meaningless under the object-store simulation — the auto
-# strategy routes around os.replace entirely there. Their commit-boundary
-# coverage under CAS lives in test_pointer_cas.py.
-replace_mechanism_only = pytest.mark.skipif(
-    os.environ.get("SPARK_GRAFT_FORBID_REPLACE") == "1",
-    reason="crash-injects os.replace itself; CAS analog in test_pointer_cas",
+import scraper_db_refine_merge_spark.operators.merge as m
+from scraper_db_refine_merge_spark.operators.merge import (
+    merge_upsert_partitioned,
+    read_partitioned_table,
+    resolve_partitioned_path,
 )
+from scraper_db_refine_merge_spark.streaming import store as st
 
 
-def _files_with_mtimes(root: str, part: str) -> dict[str, float]:
-    d = os.path.join(root, part)
+def _mk_batch(spark, rows):
+    return spark.createDataFrame(rows, "event_id string, day string, value double")
+
+
+def _table(spark, target):
+    return {
+        (r["event_id"], str(r["day"]), r["value"])
+        for r in read_partitioned_table(spark, target).collect()
+    }
+
+
+def _mapping(target):
+    return m._view_mapping(resolve_partitioned_path(target))
+
+
+def _log_entry(target):
+    """Path of the one live commit-log entry (GC keeps only the top)."""
+    [(_, name)] = st._commitlog_entries(target)
+    return os.path.join(target, st._COMMITLOG, name)
+
+
+def _files_with_mtimes(target: str, rel: str) -> dict[str, float]:
+    d = os.path.join(target, rel)
     return {f: os.path.getmtime(os.path.join(d, f)) for f in os.listdir(d) if f.endswith(".parquet")}
 
 
@@ -35,11 +55,10 @@ def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
         ],
         "event_id string, day string, value double",
     )
-    base.write.partitionBy("day").parquet(target)
+    merge_upsert_partitioned(spark, target, base, key_cols=["event_id"], partition_col="day")
 
-    untouched_before = {
-        p: _files_with_mtimes(target, f"day={p}") for p in ("2024-01-02", "2024-01-03")
-    }
+    untouched = {p: _mapping(target)[f"day={p}"] for p in ("2024-01-02", "2024-01-03")}
+    untouched_before = {p: _files_with_mtimes(target, rel) for p, rel in untouched.items()}
 
     # batch: update e1 (2024-01-01), insert e5 into a NEW partition; e1 has a
     # within-batch duplicate that latest-wins must resolve first
@@ -62,22 +81,23 @@ def test_partitioned_merge_rewrites_only_touched_partitions(spark, tmp_path):
     )
     assert touched == ["2024-01-01", "2024-01-04"]
 
-    # untouched partitions: identical files, identical mtimes — never rewritten
+    # untouched partitions: the new view maps the same data dirs, whose
+    # files keep their mtimes — never rewritten
+    mapping = _mapping(target)
     for p, before in untouched_before.items():
-        assert _files_with_mtimes(target, f"day={p}") == before
+        assert mapping[f"day={p}"] == untouched[p]
+        assert _files_with_mtimes(target, untouched[p]) == before
 
     out = {
         r["event_id"]: r["value"]
-        for r in spark.read.parquet(target).select("event_id", "value").collect()
+        for r in read_partitioned_table(spark, target).select("event_id", "value").collect()
     }
     assert out == {"e1": 99.0, "e2": 2.0, "e3": 3.0, "e4": 4.0, "e5": 5.0}
 
 
 def test_partitioned_merge_rejects_null_partition_values(spark, tmp_path):
-    """NULL partition values would land in __HIVE_DEFAULT_PARTITION__ and be
-    silently dropped by the swap loop — must be rejected at entry."""
-    import pytest
-
+    """NULL partition values would land in __HIVE_DEFAULT_PARTITION__,
+    which isin(touched) cannot prune — must be rejected at entry."""
     batch = spark.createDataFrame(
         [("e1", "2024-01-01", 1.0), ("e2", None, 2.0)],
         "event_id string, day string, value double",
@@ -89,42 +109,23 @@ def test_partitioned_merge_rejects_null_partition_values(spark, tmp_path):
 
 
 # ----------------------------------------------------------------------
-# Pointer layout (r14, VERDICT r13 item 2): fresh targets commit through
-# one atomic pointer rename — a crash ANYWHERE mid-merge (including between
-# two partition links, the window the legacy in-place swap could not
-# survive) leaves readers on the previous snapshot.
-
-from scraper_db_refine_merge_spark.operators.merge import (  # noqa: E402
-    read_partitioned_table,
-    resolve_partitioned_path,
-)
-
-
-def _mk_batch(spark, rows):
-    return spark.createDataFrame(rows, "event_id string, day string, value double")
-
-
-def _table(spark, target):
-    return {
-        (r["event_id"], str(r["day"]), r["value"])
-        for r in read_partitioned_table(spark, target).collect()
-    }
+# Commit protocol (r14, VERDICT r13 item 2): one exclusive-create log
+# entry commits a whole merge — a crash ANYWHERE before it leaves readers
+# on the previous snapshot.
 
 
 def test_pointer_layout_upsert_roundtrip(spark, tmp_path):
-    """Fresh target → pointer layout; upserts update/insert across
-    partitions; untouched partitions' data files are never rewritten."""
+    """Upserts update/insert across partitions; an untouched partition maps
+    to the SAME immutable data dir in the next view."""
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
         spark, target,
         _mk_batch(spark, [("e1", "d1", 1.0), ("e2", "d2", 2.0), ("e3", "d3", 3.0)]),
         key_cols=["event_id"], partition_col="day",
     )
-    from scraper_db_refine_merge_spark.streaming.store import pointer_exists
-
-    assert pointer_exists(target)  # pointer layout (either commit mechanism)
+    assert len(st._commitlog_entries(target)) == 1
     view1 = resolve_partitioned_path(target)
-    d2_real = os.path.realpath(os.path.join(view1, "day=d2"))
+    map1 = _mapping(target)
 
     touched = merge_upsert_partitioned(
         spark, target,
@@ -135,90 +136,42 @@ def test_pointer_layout_upsert_roundtrip(spark, tmp_path):
     assert _table(spark, target) == {
         ("e1", "d1", 10.0), ("e2", "d2", 2.0), ("e3", "d3", 3.0), ("e4", "d4", 4.0),
     }
-    # untouched partition resolves to the SAME immutable data dir
-    view2 = resolve_partitioned_path(target)
-    assert view2 != view1
-    assert os.path.realpath(os.path.join(view2, "day=d2")) == d2_real
+    assert resolve_partitioned_path(target) != view1
+    map2 = _mapping(target)
+    assert map2["day=d2"] == map1["day=d2"]
+    assert map2["day=d1"] != map1["day=d1"]
 
 
-def test_pointer_layout_crash_between_partition_links(spark, tmp_path, monkeypatch):
-    """Kill the writer between two partition symlinks: the pointer still
-    names the old snapshot, reads are byte-identical, and a retry commits
-    cleanly."""
-    import scraper_db_refine_merge_spark.operators.merge as m
-
-    target = str(tmp_path / "pt")
-    merge_upsert_partitioned(
-        spark, target,
-        _mk_batch(spark, [("e1", "d1", 1.0), ("e2", "d2", 2.0), ("e3", "d3", 3.0)]),
-        key_cols=["event_id"], partition_col="day",
-    )
-    before = _table(spark, target)
-    view_before = resolve_partitioned_path(target)  # mechanism-agnostic
-
-    real_symlink = os.symlink
-    calls = {"n": 0}
-
-    def crashing_symlink(src, dst, *a, **k):
-        calls["n"] += 1
-        if calls["n"] == 2:  # after the FIRST link of the new view
-            raise OSError("injected crash between partition links")
-        return real_symlink(src, dst, *a, **k)
-
-    monkeypatch.setattr(m.os, "symlink", crashing_symlink)
-    with pytest.raises(OSError, match="injected crash"):
-        merge_upsert_partitioned(
-            spark, target,
-            _mk_batch(spark, [("e1", "d1", 99.0), ("e4", "d4", 4.0)]),
-            key_cols=["event_id"], partition_col="day",
-        )
-    monkeypatch.undo()
-    assert calls["n"] == 2
-
-    # reads stay on the old snapshot — nothing mixed, nothing missing
-    assert resolve_partitioned_path(target) == view_before
-    assert _table(spark, target) == before
-
-    # retry succeeds and GCs the crash orphans
-    merge_upsert_partitioned(
-        spark, target,
-        _mk_batch(spark, [("e1", "d1", 99.0), ("e4", "d4", 4.0)]),
-        key_cols=["event_id"], partition_col="day",
-    )
-    assert _table(spark, target) == {
-        ("e1", "d1", 99.0), ("e2", "d2", 2.0), ("e3", "d3", 3.0), ("e4", "d4", 4.0),
-    }
-    views = [d for d in os.listdir(target) if d.startswith("v-")]
-    assert len(views) == 1  # orphaned view dirs collected
-
-
-@replace_mechanism_only
-def test_pointer_layout_crash_before_pointer_replace(spark, tmp_path, monkeypatch):
-    """Kill the writer after ALL data and links are staged but before the
-    pointer commit: still invisible to readers."""
-    import scraper_db_refine_merge_spark.operators.merge as m
-
+def test_pointer_layout_crash_mid_pointer_put(spark, tmp_path, monkeypatch):
+    """Kill the writer between the exclusive create of its log entry and
+    the entry's content: the torn (empty) top entry is skipped, readers
+    stay on the old snapshot, and a retry commits over the torn entry."""
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
         spark, target, _mk_batch(spark, [("e1", "d1", 1.0)]),
         key_cols=["event_id"], partition_col="day",
     )
     before = _table(spark, target)
+    view_before = resolve_partitioned_path(target)
 
-    real_replace = os.replace
+    real_open = os.open
 
-    def crashing_replace(src, dst, *a, **k):
-        if os.path.basename(dst) == "CURRENT":
-            raise OSError("injected crash at pointer commit")
-        return real_replace(src, dst, *a, **k)
+    def crashing_open(path, flags, *a, **k):
+        fd = real_open(path, flags, *a, **k)
+        if os.path.basename(os.path.dirname(path)) == st._COMMITLOG:
+            os.close(fd)  # the entry exists, its content never lands
+            raise OSError("injected crash mid log put")
+        return fd
 
-    monkeypatch.setattr(m.os, "replace", crashing_replace)
+    monkeypatch.setattr(os, "open", crashing_open)
     with pytest.raises(OSError, match="injected crash"):
         merge_upsert_partitioned(
             spark, target, _mk_batch(spark, [("e1", "d1", 2.0)]),
             key_cols=["event_id"], partition_col="day",
         )
     monkeypatch.undo()
+    assert len(st._commitlog_entries(target)) == 2  # the torn entry is there
+    assert resolve_partitioned_path(target) == view_before
     assert _table(spark, target) == before
 
     merge_upsert_partitioned(
@@ -226,27 +179,31 @@ def test_pointer_layout_crash_before_pointer_replace(spark, tmp_path, monkeypatc
         key_cols=["event_id"], partition_col="day",
     )
     assert _table(spark, target) == {("e1", "d1", 2.0)}
+    views = [d for d in os.listdir(target) if d.startswith("v-")]
+    assert len(views) == 1  # crash orphan GC'd
 
 
-def test_legacy_plain_layout_keeps_inplace_swap(spark, tmp_path):
-    """A pre-existing plain hive table keeps the legacy in-place swap (no
-    silent migration under readers pointed at the plain dir)."""
-    target = str(tmp_path / "legacy")
+def test_plain_hive_target_is_refused(spark, tmp_path):
+    """A pre-existing plain hive directory has no commit log: its readers
+    scan the directory itself and would never see a committed view, so
+    the merge refuses it instead of migrating it under them."""
+    target = str(tmp_path / "plain")
     _mk_batch(spark, [("e1", "d1", 1.0), ("e2", "d2", 2.0)]).write.partitionBy(
         "day"
     ).parquet(target)
-    merge_upsert_partitioned(
-        spark, target, _mk_batch(spark, [("e1", "d1", 9.0)]),
-        key_cols=["event_id"], partition_col="day",
-    )
-    assert not os.path.exists(os.path.join(target, "CURRENT"))
-    assert resolve_partitioned_path(target) == target
-    assert _table(spark, target) == {("e1", "d1", 9.0), ("e2", "d2", 2.0)}
+    before = sorted(os.listdir(target))
+    with pytest.raises(ValueError, match="not a partitioned merge table"):
+        merge_upsert_partitioned(
+            spark, target, _mk_batch(spark, [("e1", "d1", 9.0)]),
+            key_cols=["event_id"], partition_col="day",
+        )
+    assert sorted(os.listdir(target)) == before
+    assert read_partitioned_table(spark, target) is None
 
 
 def test_pointer_layout_hive_escaped_partition_values(spark, tmp_path):
     """Partition values the hive writer percent-escapes (':' in a
-    timestamp-like string) must round-trip: the commit links the dirs the
+    timestamp-like string) must round-trip: the view maps the dirs the
     staged write PRODUCED, never names constructed from str(value)."""
     target = str(tmp_path / "esc")
     merge_upsert_partitioned(
@@ -257,7 +214,7 @@ def test_pointer_layout_hive_escaped_partition_values(spark, tmp_path):
     assert _table(spark, target) == {
         ("e1", "2025-05-05 21:30:00", 1.0), ("e2", "plain", 2.0),
     }
-    # upsert into the escaped partition: new value wins, nothing relinks stale
+    # upsert into the escaped partition: new value wins, nothing re-maps stale
     merge_upsert_partitioned(
         spark, target,
         _mk_batch(spark, [("e1", "2025-05-05 21:30:00", 9.0)]),
@@ -266,40 +223,28 @@ def test_pointer_layout_hive_escaped_partition_values(spark, tmp_path):
     assert _table(spark, target) == {
         ("e1", "2025-05-05 21:30:00", 9.0), ("e2", "plain", 2.0),
     }
-    view = resolve_partitioned_path(target)
-    assert any("%3A" in d for d in os.listdir(view))  # escaping really happened
-
-
-def test_legacy_layout_hive_escaped_partition_values(spark, tmp_path):
-    """Same escaping contract for the legacy in-place swap."""
-    target = str(tmp_path / "escl")
-    _mk_batch(spark, [("e1", "a:b", 1.0), ("e2", "c", 2.0)]).write.partitionBy(
-        "day"
-    ).parquet(target)
-    merge_upsert_partitioned(
-        spark, target, _mk_batch(spark, [("e1", "a:b", 9.0)]),
-        key_cols=["event_id"], partition_col="day",
-    )
-    assert _table(spark, target) == {("e1", "a:b", 9.0), ("e2", "c", 2.0)}
+    assert any("%3A" in name for name in _mapping(target))  # escaping really happened
 
 
 # ----------------------------------------------------------------------
-# r15 (ADVICE r14, medium): a torn/empty or dangling CURRENT must fail the
-# WRITER loudly — re-initializing over it would let post-commit GC delete
-# every prior view/data commit. Readers keep returning None (safe).
+# r15 (ADVICE r14, medium): a log whose committed entry names no snapshot
+# must fail the WRITER loudly — re-initializing over it would let
+# post-commit GC delete every prior view/data commit. Readers keep
+# returning None (safe). Two commits first, so the live entry is not the
+# first commit's (an empty first entry is a torn first commit: fresh).
 
 
 @pytest.mark.parametrize("corruption", ["", "v-999999-deadbeef"])
 def test_pointer_corruption_blocks_writer_not_reader(spark, tmp_path, corruption):
     target = str(tmp_path / "pt")
-    merge_upsert_partitioned(
-        spark, target,
-        _mk_batch(spark, [("e1", "d1", 1.0), ("e2", "d2", 2.0)]),
-        key_cols=["event_id"], partition_col="day",
-    )
+    for rows in ([("e1", "d1", 1.0)], [("e2", "d2", 2.0)]):
+        merge_upsert_partitioned(
+            spark, target, _mk_batch(spark, rows), key_cols=["event_id"], partition_col="day",
+        )
     view_before = resolve_partitioned_path(target)
+    entry = _log_entry(target)
 
-    with open(os.path.join(target, "CURRENT"), "w") as f:
+    with open(entry, "w") as f:
         f.write(corruption)
 
     # reader: safe None, no raise
@@ -308,7 +253,7 @@ def test_pointer_corruption_blocks_writer_not_reader(spark, tmp_path, corruption
 
     # writer: refuses — and leaves every prior commit dir on disk
     dirs_before = sorted(os.listdir(target))
-    with pytest.raises(RuntimeError, match="CURRENT exists but"):
+    with pytest.raises(st.StoreCorruptPointerError, match="names no snapshot"):
         merge_upsert_partitioned(
             spark, target,
             _mk_batch(spark, [("e9", "d9", 9.0)]),
@@ -316,8 +261,8 @@ def test_pointer_corruption_blocks_writer_not_reader(spark, tmp_path, corruption
         )
     assert sorted(os.listdir(target)) == dirs_before
 
-    # recovery: restoring the pointer brings the old snapshot back intact
-    with open(os.path.join(target, "CURRENT"), "w") as f:
+    # recovery: restoring the entry brings the old snapshot back intact
+    with open(entry, "w") as f:
         f.write(os.path.basename(view_before))
     assert _table(spark, target) == {("e1", "d1", 1.0), ("e2", "d2", 2.0)}
     merge_upsert_partitioned(
@@ -332,64 +277,44 @@ def test_pointer_corruption_blocks_writer_not_reader(spark, tmp_path, corruption
 
 @pytest.mark.parametrize("corruption", ["", "v-999999-deadbeef"])
 def test_store_pointer_corruption_blocks_writers(spark, tmp_path, corruption):
-    from scraper_db_refine_merge_spark.streaming.store import (
-        StoreCorruptPointerError,
-        store_commit,
-        store_commit_parts,
-        store_compact,
-        store_read,
-    )
-
     target = str(tmp_path / "store")
-    store_commit_parts({"t": spark.createDataFrame([(1,)], "k long")}, target)
+    for k in (1, 2):
+        st.store_commit_parts({"t": spark.createDataFrame([(k,)], "k long")}, target)
 
-    with open(os.path.join(target, "CURRENT"), "w") as f:
+    with open(_log_entry(target), "w") as f:
         f.write(corruption)
 
-    assert store_read(spark, target) is None  # reader: safe None
+    assert st.store_read(spark, target) is None  # reader: safe None
 
-    df = spark.createDataFrame([(2,)], "k long")
-    with pytest.raises(StoreCorruptPointerError):
-        store_commit_parts({"t": df}, target)
-    with pytest.raises(StoreCorruptPointerError):
-        store_commit(df, target)
-    with pytest.raises(StoreCorruptPointerError):
-        store_compact(spark, target)
+    df = spark.createDataFrame([(3,)], "k long")
+    with pytest.raises(st.StoreCorruptPointerError):
+        st.store_commit_parts({"t": df}, target)
+    with pytest.raises(st.StoreCorruptPointerError):
+        st.store_commit(df, target)
+    with pytest.raises(st.StoreCorruptPointerError):
+        st.store_compact(spark, target)
 
 
 # ----------------------------------------------------------------------
-# r15 (VERDICT r14 item 5): MANIFEST view layout — the symlink-free format
-# for filesystems without symlinks (object stores). Same pointer commit,
-# same crash windows, and it must behave identically with os.symlink
-# DISABLED end to end.
+# r15 (VERDICT r14 item 5): the view is a manifest, not a directory tree of
+# links, so the layout needs neither symlinks nor renames.
 
 
-@pytest.fixture
-def no_symlinks(monkeypatch):
-    """Simulate a symlink-free filesystem (object-store-like): any
-    os.symlink call raises, including the layout="auto" probe."""
+def test_manifest_layout_roundtrip_without_symlinks(spark, tmp_path, monkeypatch):
+    """With os.symlink and os.replace refused, upserts commit and read back;
+    each view dir holds only its manifest."""
     def refuse(*a, **k):
-        raise OSError("symlinks not supported on this filesystem")
+        raise OSError("not supported on this filesystem")
 
     monkeypatch.setattr(os, "symlink", refuse)
-
-
-def test_manifest_layout_roundtrip_without_symlinks(spark, tmp_path, no_symlinks):
-    """auto layout on a symlink-free FS → manifest views; upserts update/
-    insert across partitions; untouched partitions' data dirs are reused,
-    not rewritten."""
-    import scraper_db_refine_merge_spark.operators.merge as m
-
+    monkeypatch.setattr(os, "replace", refuse)
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
         spark, target,
         _mk_batch(spark, [("e1", "d1", 1.0), ("e2", "d2", 2.0), ("e3", "d3", 3.0)]),
         key_cols=["event_id"], partition_col="day",
     )
-    view1 = resolve_partitioned_path(target)
-    assert os.path.exists(os.path.join(view1, m._PT_MANIFEST))
-    assert not any(os.path.islink(os.path.join(view1, n)) for n in os.listdir(view1))
-    map1 = m._view_mapping(target, view1, "day=")
+    assert os.listdir(resolve_partitioned_path(target)) == [m._PT_MANIFEST]
 
     touched = merge_upsert_partitioned(
         spark, target,
@@ -400,53 +325,12 @@ def test_manifest_layout_roundtrip_without_symlinks(spark, tmp_path, no_symlinks
     assert _table(spark, target) == {
         ("e1", "d1", 10.0), ("e2", "d2", 2.0), ("e3", "d3", 3.0), ("e4", "d4", 4.0),
     }
-    view2 = resolve_partitioned_path(target)
-    map2 = m._view_mapping(target, view2, "day=")
-    assert map2["day=d2"] == map1["day=d2"]  # untouched → same immutable data
-    assert map2["day=d1"] != map1["day=d1"]
+    assert os.listdir(resolve_partitioned_path(target)) == [m._PT_MANIFEST]
 
 
-@replace_mechanism_only
-def test_manifest_layout_crash_before_pointer_replace(spark, tmp_path, monkeypatch, no_symlinks):
-    import scraper_db_refine_merge_spark.operators.merge as m
-
-    target = str(tmp_path / "pt")
-    merge_upsert_partitioned(
-        spark, target, _mk_batch(spark, [("e1", "d1", 1.0)]),
-        key_cols=["event_id"], partition_col="day",
-    )
-    before = _table(spark, target)
-
-    real_replace = os.replace
-
-    def crashing_replace(src, dst, *a, **k):
-        if os.path.basename(dst) == "CURRENT":
-            raise OSError("injected crash at pointer commit")
-        return real_replace(src, dst, *a, **k)
-
-    monkeypatch.setattr(m.os, "replace", crashing_replace)
-    with pytest.raises(OSError, match="injected crash"):
-        merge_upsert_partitioned(
-            spark, target, _mk_batch(spark, [("e1", "d1", 2.0)]),
-            key_cols=["event_id"], partition_col="day",
-        )
-    monkeypatch.setattr(m.os, "replace", real_replace)
-    assert _table(spark, target) == before
-
-    merge_upsert_partitioned(
-        spark, target, _mk_batch(spark, [("e1", "d1", 2.0)]),
-        key_cols=["event_id"], partition_col="day",
-    )
-    assert _table(spark, target) == {("e1", "d1", 2.0)}
-    views = [d for d in os.listdir(target) if d.startswith("v-")]
-    assert len(views) == 1  # crash orphan GC'd
-
-
-def test_manifest_layout_crash_during_manifest_write(spark, tmp_path, monkeypatch, no_symlinks):
-    """Kill the writer mid-manifest (the analog of 'between two partition
-    links'): readers stay on the old snapshot, retry commits cleanly."""
-    import scraper_db_refine_merge_spark.operators.merge as m
-
+def test_manifest_layout_crash_during_manifest_write(spark, tmp_path, monkeypatch):
+    """Kill the writer mid-manifest: readers stay on the old snapshot,
+    retry commits cleanly."""
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
         spark, target,
@@ -454,7 +338,7 @@ def test_manifest_layout_crash_during_manifest_write(spark, tmp_path, monkeypatc
         key_cols=["event_id"], partition_col="day",
     )
     before = _table(spark, target)
-    view_before = resolve_partitioned_path(target)  # mechanism-agnostic
+    view_before = resolve_partitioned_path(target)
 
     real_dump = m.json.dump
 
@@ -472,7 +356,6 @@ def test_manifest_layout_crash_during_manifest_write(spark, tmp_path, monkeypatc
             key_cols=["event_id"], partition_col="day",
         )
     monkeypatch.undo()
-    monkeypatch.setattr(os, "symlink", lambda *a, **k: (_ for _ in ()).throw(OSError("no symlinks")))
 
     assert resolve_partitioned_path(target) == view_before
     assert _table(spark, target) == before
@@ -487,67 +370,35 @@ def test_manifest_layout_crash_during_manifest_write(spark, tmp_path, monkeypatc
     }
 
 
-def test_layout_interop_symlink_then_manifest(spark, tmp_path):
-    """A table can switch view formats across versions: a symlink-view
-    table keeps working when later commits write manifest views (e.g. the
-    table moved to a symlink-free mount)."""
-    target = str(tmp_path / "pt")
-    merge_upsert_partitioned(
-        spark, target,
-        _mk_batch(spark, [("e1", "d1", 1.0), ("e2", "d2", 2.0)]),
-        key_cols=["event_id"], partition_col="day", layout="symlink",
-    )
-    merge_upsert_partitioned(
-        spark, target,
-        _mk_batch(spark, [("e3", "d3", 3.0)]),
-        key_cols=["event_id"], partition_col="day", layout="manifest",
-    )
-    assert _table(spark, target) == {
-        ("e1", "d1", 1.0), ("e2", "d2", 2.0), ("e3", "d3", 3.0),
-    }
-    merge_upsert_partitioned(
-        spark, target,
-        _mk_batch(spark, [("e2", "d2", 22.0)]),
-        key_cols=["event_id"], partition_col="day", layout="symlink",
-    )
-    assert _table(spark, target) == {
-        ("e1", "d1", 1.0), ("e2", "d2", 22.0), ("e3", "d3", 3.0),
-    }
-
-
-def test_manifest_layout_pointer_corruption_blocks_writer(spark, tmp_path, no_symlinks):
+def test_manifest_layout_pointer_corruption_blocks_writer(spark, tmp_path):
+    """A FIRST commit's entry naming a view that does not exist is
+    corruption, not a torn first commit (that one is empty): readers
+    None, the writer refuses."""
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
         spark, target, _mk_batch(spark, [("e1", "d1", 1.0)]),
         key_cols=["event_id"], partition_col="day",
     )
-    with open(os.path.join(target, "CURRENT"), "w") as f:
-        f.write("")
+    with open(_log_entry(target), "w") as f:
+        f.write("v-000001-deadbeef")
     assert read_partitioned_table(spark, target) is None
-    with pytest.raises(RuntimeError, match="CURRENT exists but"):
+    with pytest.raises(st.StoreCorruptPointerError, match="names no snapshot"):
         merge_upsert_partitioned(
             spark, target, _mk_batch(spark, [("e2", "d2", 2.0)]),
             key_cols=["event_id"], partition_col="day",
         )
 
 
-def test_manifest_empty_mapping_raises_descriptive_error(spark, tmp_path, no_symlinks):
+def test_manifest_empty_mapping_raises_descriptive_error(spark, tmp_path):
     """r16 ADVICE: a hand-truncated/corrupt _VIEW_MANIFEST.json mapping no
-    partitions must surface as a descriptive error, not a bare IndexError
-    from dfs[0]."""
-    import json
-
-    import scraper_db_refine_merge_spark.operators.merge as m
-    from scraper_db_refine_merge_spark.operators.merge import read_partitioned_table
-
+    partitions must surface as a descriptive error."""
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
         spark, target,
         _mk_batch(spark, [("e1", "d1", 1.0)]),
         key_cols=["event_id"], partition_col="day",
     )
-    view = resolve_partitioned_path(target)
-    with open(os.path.join(view, m._PT_MANIFEST), "w") as f:
+    with open(os.path.join(resolve_partitioned_path(target), m._PT_MANIFEST), "w") as f:
         json.dump({}, f)
     with pytest.raises(RuntimeError, match="maps no"):
         read_partitioned_table(spark, target)

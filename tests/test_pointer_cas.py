@@ -1,12 +1,12 @@
-"""CAS (conditional-put) pointer commits — the object-store strategy that
-removes the last POSIX atomic-rename assumption (r16, VERDICT r15 item 1).
+"""The commit log — the store's one commit mechanism, free of renames and
+symlinks (streaming/store.py).
 
 Committing version N = EXCLUSIVE CREATE of ``_commits/c-<N>`` (put-if-absent
-on a real object store); readers resolve the highest INTACT entry. These
-tests pin the mechanics the ``SPARK_GRAFT_FORBID_REPLACE=1`` whole-suite run
-exercises end to end: strategy fallback, mixed-mechanism resolution, crash
-fallback on torn top entries, the exclusive-create single-writer check, log
-GC, and the partitioned-merge integration.
+on an object store); readers resolve the highest INTACT entry. These tests
+pin the mechanics: crash fallback on torn top entries, the fresh-vs-corrupt
+rule for a log with no intact entry, the exclusive-create single-writer
+check, log GC, and the partitioned-merge integration, with os.replace and
+os.symlink refused where the whole commit path runs.
 """
 
 from __future__ import annotations
@@ -43,12 +43,11 @@ def no_replace(monkeypatch):
 
 def test_cas_commit_roundtrip_and_log_gc(spark, tmp_path):
     target = str(tmp_path / "s")
-    st.store_commit(_df(spark, [("a", 1)]), target, pointer_strategy="cas")
-    assert not os.path.exists(os.path.join(target, "CURRENT"))
+    st.store_commit(_df(spark, [("a", 1)]), target)
     assert [s for s, _ in st._commitlog_entries(target)] == [1]
     assert _rows(spark, target) == {("a", 1)}
 
-    st.store_commit(_df(spark, [("a", 2)]), target, pointer_strategy="cas")
+    st.store_commit(_df(spark, [("a", 2)]), target)
     assert _rows(spark, target) == {("a", 2)}
     # superseded entry GC'd; one live entry at the committed seq
     assert [s for s, _ in st._commitlog_entries(target)] == [2]
@@ -56,68 +55,12 @@ def test_cas_commit_roundtrip_and_log_gc(spark, tmp_path):
     assert [s for s, _ in st.store_versions(target)] == [2]
 
 
-def test_auto_strategy_falls_back_to_cas_without_replace(spark, tmp_path, no_replace):
-    target = str(tmp_path / "s")
-    st.store_commit(_df(spark, [("a", 1)]), target)  # auto
-    assert not os.path.exists(os.path.join(target, "CURRENT"))
-    assert len(st._commitlog_entries(target)) == 1
-    assert _rows(spark, target) == {("a", 1)}
-
-
-def test_auto_strategy_sticks_with_cas_once_log_exists(spark, tmp_path):
-    """A table created on an object store keeps the log mechanism when
-    later committed from a POSIX host (one mechanism per table)."""
-    target = str(tmp_path / "s")
-    st.store_commit(_df(spark, [("a", 1)]), target, pointer_strategy="cas")
-    st.store_commit(_df(spark, [("a", 2)]), target)  # auto, os.replace works
-    assert not os.path.exists(os.path.join(target, "CURRENT"))
-    assert _rows(spark, target) == {("a", 2)}
-
-
-@pytest.mark.skipif(
-    os.environ.get("SPARK_GRAFT_FORBID_REPLACE") == "1",
-    reason="exercises the replace mechanism explicitly",
-)
-def test_mixed_mechanism_resolution_and_migration(spark, tmp_path):
-    """replace-mode history then CAS commits: during the commit the log's
-    newer seq outvotes the stale CURRENT file (resolution compares seqs);
-    after the commit, GC removes the superseded CURRENT — a later version
-    GC of the dir it names must not read as pointer corruption — so the
-    table completes its migration to the log mechanism."""
-    target = str(tmp_path / "s")
-    st.store_commit(_df(spark, [("a", 1)]), target, pointer_strategy="replace")
-    current = os.path.join(target, "CURRENT")
-    assert os.path.exists(current)
-    v1 = st.resolve_pointer_name(target)
-
-    # resolution preference, observed mid-flight: put a CAS entry for a
-    # higher seq WITHOUT the GC that a full commit runs
-    v2 = "v-000002-feedface"
-    os.makedirs(os.path.join(target, v2))
-    st.put_pointer(target, v2, strategy="cas")
-    with open(current) as f:
-        assert f.read().strip() == v1  # stale file still present...
-    assert st.resolve_pointer_name(target) == v2  # ...but outvoted
-
-    # GC completes the migration: superseded CURRENT removed
-    st._gc_commitlog(target, v2)
-    assert not os.path.exists(current)
-    assert st.resolve_pointer_name(target) == v2
-
-    # and a full auto commit keeps working on the now-pure-CAS store
-    # (auto sticks with the log: seq derives from v2, entry c-000003)
-    st.store_commit(_df(spark, [("a", 2)]), target)
-    assert not os.path.exists(current)
-    assert [s for s, _ in st._commitlog_entries(target)] == [3]
-    assert _rows(spark, target) == {("a", 2)}
-
-
 def test_torn_top_log_entry_falls_back_to_previous_commit(spark, tmp_path):
     """A crashed CAS writer leaves an empty/dangling top entry; readers
     fall back to the last intact entry (append-only crash semantics), and
     the next commit clears the torn orphan at its seq."""
     target = str(tmp_path / "s")
-    st.store_commit(_df(spark, [("a", 1)]), target, pointer_strategy="cas")
+    st.store_commit(_df(spark, [("a", 1)]), target)
     log_dir = os.path.join(target, st._COMMITLOG)
     open(os.path.join(log_dir, "c-000002"), "w").close()  # torn: empty
     assert _rows(spark, target) == {("a", 1)}
@@ -126,34 +69,35 @@ def test_torn_top_log_entry_falls_back_to_previous_commit(spark, tmp_path):
         f.write("v-000002-deadbeef")
     assert _rows(spark, target) == {("a", 1)}
 
-    st.store_commit(_df(spark, [("a", 2)]), target, pointer_strategy="cas")
+    st.store_commit(_df(spark, [("a", 2)]), target)
     assert _rows(spark, target) == {("a", 2)}
+
+
+def test_empty_first_log_entry_reads_as_fresh(spark, tmp_path):
+    """A first commit torn between the exclusive create and its content
+    leaves an empty ``c-000001`` and no snapshot: the store is fresh, and
+    the next commit takes seq 1 over the torn entry."""
+    target = str(tmp_path / "s")
+    os.makedirs(os.path.join(target, st._COMMITLOG))
+    open(os.path.join(target, st._COMMITLOG, "c-000001"), "w").close()
+    assert st.store_read(spark, target) is None
+    st.store_commit(_df(spark, [("a", 1)]), target)
+    assert _rows(spark, target) == {("a", 1)}
+    assert [s for s, _ in st._commitlog_entries(target)] == [1]
 
 
 def test_cas_exclusive_create_rejects_competing_writer(spark, tmp_path):
     """Two writers deriving the same next seq from the same prior snapshot:
     the loser's conditional put fails BEFORE its state becomes visible."""
     target = str(tmp_path / "s")
-    st.store_commit(_df(spark, [("a", 1)]), target, pointer_strategy="cas")
+    st.store_commit(_df(spark, [("a", 1)]), target)
     # competitor committed seq 2 first: intact entry naming a real dir
     os.makedirs(os.path.join(target, "v-000002-feedface"))
     open(os.path.join(target, "v-000002-feedface", "_x"), "w").close()
     with open(os.path.join(target, st._COMMITLOG, "c-000002"), "w") as f:
         f.write("v-000002-feedface")
     with pytest.raises(st.StoreConcurrentWriterError):
-        st.put_pointer(target, "v-000002-00000000", strategy="cas")
-
-
-def test_corrupt_current_stays_strict_even_with_intact_log(spark, tmp_path):
-    """An empty CURRENT file is replace-mode corruption: resolution refuses
-    the whole store (readers None, writers StoreCorruptPointerError) even
-    when the log holds intact entries — ambiguous state is never guessed."""
-    target = str(tmp_path / "s")
-    st.store_commit(_df(spark, [("a", 1)]), target, pointer_strategy="cas")
-    open(os.path.join(target, "CURRENT"), "w").close()
-    assert st.store_version_dir(target) is None
-    with pytest.raises(st.StoreCorruptPointerError):
-        st.store_commit(_df(spark, [("a", 2)]), target, pointer_strategy="cas")
+        st.put_pointer(target, "v-000002-00000000")
 
 
 def test_store_commit_parts_and_compact_under_cas(spark, tmp_path, no_replace):
@@ -167,7 +111,6 @@ def test_store_commit_parts_and_compact_under_cas(spark, tmp_path, no_replace):
     st.store_compact(spark, target)
     got = {tuple(r) for r in st.store_read_part(spark, target, "t").collect()}
     assert got == {("a", 1), ("b", 2)}
-    assert not os.path.exists(os.path.join(target, "CURRENT"))
 
 
 def _mk_batch(spark, rows):
@@ -176,8 +119,8 @@ def _mk_batch(spark, rows):
 
 def test_partitioned_merge_rename_and_symlink_free(spark, tmp_path, no_replace, monkeypatch):
     """The full object-store commit path: manifest views (no symlinks) +
-    CAS pointer (no renames). Two upserts, latest-wins read-back, no
-    CURRENT file, untouched partition data reused."""
+    the commit log (no renames). Two upserts, latest-wins read-back, one
+    live log entry."""
     def refuse(*a, **k):
         raise OSError("symlinks not supported")
 
@@ -193,7 +136,6 @@ def test_partitioned_merge_rename_and_symlink_free(spark, tmp_path, no_replace, 
         _mk_batch(spark, [("e1", "d1", 10.0), ("e3", "d3", 3.0)]),
         key_cols=["event_id"], partition_col="day",
     )
-    assert not os.path.exists(os.path.join(target, "CURRENT"))
     assert len(st._commitlog_entries(target)) == 1
     got = {tuple(r) for r in read_partitioned_table(spark, target).collect()}
     assert got == {("e1", 10.0, "d1"), ("e2", 2.0, "d2"), ("e3", 3.0, "d3")}
@@ -211,7 +153,7 @@ def test_partitioned_merge_crash_before_cas_put_leaves_previous_snapshot(
     target = str(tmp_path / "pt")
     merge_upsert_partitioned(
         spark, target, _mk_batch(spark, [("e1", "d1", 1.0)]),
-        key_cols=["event_id"], partition_col="day", layout="manifest",
+        key_cols=["event_id"], partition_col="day",
     )
     before = {tuple(r) for r in read_partitioned_table(spark, target).collect()}
 
@@ -224,14 +166,16 @@ def test_partitioned_merge_crash_before_cas_put_leaves_previous_snapshot(
     with pytest.raises(RuntimeError, match="injected"):
         merge_upsert_partitioned(
             spark, target, _mk_batch(spark, [("e1", "d1", 99.0)]),
-            key_cols=["event_id"], partition_col="day", layout="manifest",
+            key_cols=["event_id"], partition_col="day",
         )
     assert {tuple(r) for r in read_partitioned_table(spark, target).collect()} == before
 
     monkeypatch.setattr(st, "put_pointer", real_put)
     merge_upsert_partitioned(
         spark, target, _mk_batch(spark, [("e1", "d1", 5.0)]),
-        key_cols=["event_id"], partition_col="day", layout="manifest",
+        key_cols=["event_id"], partition_col="day",
     )
     got = {tuple(r) for r in read_partitioned_table(spark, target).collect()}
     assert got == {("e1", 5.0, "d1")}
+    assert len([d for d in os.listdir(target) if d.startswith("v-")]) == 1
+    assert len(os.listdir(os.path.join(target, "data"))) == 1

@@ -379,34 +379,34 @@ def test_store_parts_gc_drops_unreferenced_orphans(spark, tmp_path):
     assert sorted(r.k for r in store_read_part(spark, target, "pairs").collect()) == [1, 2]
 
 
-def test_store_single_writer_violation_raises(spark, tmp_path):
-    """The commit section enforces the single-writer contract: if CURRENT
-    is not the version just committed after the pointer replace, the
-    commit raises instead of silently losing an update. Simulated via a
-    monkeypatched os.replace that lets a competing pointer land last."""
+def test_store_single_writer_violation_raises(spark, tmp_path, monkeypatch):
+    """The commit section enforces the single-writer contract: a competing
+    writer that commits the same seq first (its log entry lands while this
+    writer is between its snapshot write and its put) makes this commit
+    raise instead of silently losing an update — and the competitor's
+    state stays the committed one."""
     import os as _os
+
+    import pytest
 
     from scraper_db_refine_merge_spark.streaming import store as st
 
     target = str(tmp_path / "store")
     st.store_commit(spark.createDataFrame([(1,)], "k long"), target)
 
-    real_replace = _os.replace
+    real_put = st.put_pointer
 
-    def racing_replace(src, dst):
-        real_replace(src, dst)
-        if _os.path.basename(dst) == "CURRENT":
-            with open(dst, "w") as f:  # competing writer wins the pointer
-                f.write("v-000777-feedface")
+    def racing_put(target_path, version):
+        rival = f"v-{st._seq_of(version):06d}-feedface"
+        spark.createDataFrame([(7,)], "k long").write.parquet(_os.path.join(target_path, rival))
+        real_put(target_path, rival)  # competing writer wins the entry
+        real_put(target_path, version)
 
-    _os.replace = racing_replace
-    try:
-        import pytest
-
-        with pytest.raises(st.StoreConcurrentWriterError):
-            st.store_commit(spark.createDataFrame([(2,)], "k long"), target)
-    finally:
-        _os.replace = real_replace
+    monkeypatch.setattr(st, "put_pointer", racing_put)
+    with pytest.raises(st.StoreConcurrentWriterError):
+        st.store_commit(spark.createDataFrame([(2,)], "k long"), target)
+    monkeypatch.undo()
+    assert [r.k for r in st.store_read(spark, target).collect()] == [7]
 
 
 def test_store_commit_parts_migrates_commit_many_snapshot(spark, tmp_path):

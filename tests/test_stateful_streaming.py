@@ -160,9 +160,9 @@ def test_stream_ingest_partitioned_merge(spark, tmp_path):
     rows = {r["title"]: r for r in t.collect()}
     assert set(rows) == {"Party A", "Party B"}
     assert rows["Party A"]["content"]["full_description"] == "v2"  # latest won
-    # hive layout in the live snapshot: one directory per event date
-    # (pointer layout since r14 — fresh targets commit via CURRENT)
+    # hive layout in the live snapshot: the view maps one directory per
+    # event date
+    from scraper_db_refine_merge_spark.operators.merge import _view_mapping
+
     view = resolve_partitioned_path(target)
-    assert view != target  # fresh table → pointer layout
-    parts = sorted(d for d in _os.listdir(view) if d.startswith("event_date="))
-    assert parts == ["event_date=2025-05-05", "event_date=2025-05-06"]
+    assert sorted(_view_mapping(view)) == ["event_date=2025-05-05", "event_date=2025-05-06"]

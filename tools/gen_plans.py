@@ -163,14 +163,14 @@ def main() -> None:
         "\n  take the crossJoin+window fallback they should."
         "\n- q113/q129/q131/q141 COMPACT their fold store before the final"
         "\n  read (store_compact: one part per table behind one atomic"
-        "\n  pointer replace) — the oracle gate now proves compaction is"
+        "\n  commit) — the oracle gate now proves compaction is"
         "\n  read-identical every round; read cost no longer grows with"
         "\n  fold count."
-        "\n- merge_upsert_partitioned commits fresh targets via a pointer"
-        "\n  layout (immutable symlink views over immutable data commits,"
-        "\n  one atomic os.replace) — crash between partition swaps can no"
-        "\n  longer leave a mixed table; untouched partitions re-link, not"
-        "\n  rewrite. Legacy plain-hive targets keep the in-place swap."
+        "\n- merge_upsert_partitioned commits through immutable manifest"
+        "\n  views over immutable data commits, one exclusive-create"
+        "\n  commit-log entry per merge — crash between partition writes can"
+        "\n  no longer leave a mixed table; untouched partitions are"
+        "\n  re-mapped, not rewritten. A plain hive directory is refused."
         "\n- latest_wins auto-routes hot-key frames (>10% share, measured"
         "\n  by one exact keyed-count pass over the frame — memoized per"
         "\n  frame; persist expensive upstreams first, see the latest_wins"
